@@ -1,8 +1,12 @@
 package graft.catalog
 
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
@@ -32,40 +36,47 @@ object TableEnumerator {
     * are read. This is the engine's analog of `pg_class.reltuples`
     * (`/root/reference/src/listTables.tsx:336-345`), except parquet footers
     * are exact, so "estimated" mode is both fast AND right.
-    *
-    * Footers are read on the driver for small file counts and distributed
-    * over executors above [[DistributeThreshold]] — at 100 TB a table can
-    * have 10⁵–10⁶ files and a driver-side loop would be the bottleneck.
     */
-  def footerRowCount(spark: SparkSession, tablePath: String): Long = {
+  def footerRowCount(spark: SparkSession, tablePath: String): Long =
+    mapFiles(spark, dataFiles(spark.sparkContext.hadoopConfiguration, new Path(tablePath)))(
+      (conf, f) => withFooter(conf, f)(_.getBlocks.asScala.map(_.getRowCount).sum)).sum
+
+  /** `read` applied to every file: on the driver for small file counts, as
+    * one job over executors above [[DistributeThreshold]] — at 100 TB a
+    * table can have 10⁵–10⁶ files and a driver-side loop would be the
+    * bottleneck. Executors see the SESSION's Hadoop conf (credentials, fs
+    * schemes) — a default Configuration() works on local paths only. */
+  private[graft] def mapFiles[T: ClassTag](spark: SparkSession, files: Seq[Path])(
+      read: (Configuration, Path) => T): Seq[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = dataFiles(conf, new Path(tablePath))
-    if (files.size <= DistributeThreshold) files.map(f => footerCount(conf, f)).sum
+    if (files.size <= DistributeThreshold) files.map(read(conf, _))
     else {
-      // executors must see the SESSION's Hadoop conf (credentials, fs
-      // schemes) — a default Configuration() works on local paths only
       val props = confProps(conf)
       spark.sparkContext
         .parallelize(files.map(_.toString), math.max(1, files.size / 16))
         .mapPartitions { it =>
           val c = confFromProps(props)
-          it.map(p => footerCount(c, new Path(p)))
+          it.map(p => read(c, new Path(p)))
         }
-        .sum()
-        .toLong
+        .collect().toSeq
     }
   }
 
-  /** Hadoop Configuration ⇄ serializable props, for shipping the session's
-    * filesystem settings into executor-side footer reads. */
-  private[graft] def confProps(conf: Configuration): Seq[(String, String)] = {
+  /** `f` over the footer of one parquet file (metadata only). */
+  private[graft] def withFooter[T](conf: Configuration, file: Path)(f: ParquetMetadata => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try f(reader.getFooter)
+    finally reader.close()
+  }
+
+  private def confProps(conf: Configuration): Seq[(String, String)] = {
     val it = conf.iterator()
     val b = Seq.newBuilder[(String, String)]
     while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
     b.result()
   }
 
-  private[graft] def confFromProps(props: Seq[(String, String)]): Configuration = {
+  private def confFromProps(props: Seq[(String, String)]): Configuration = {
     val c = new Configuration(false)
     props.foreach { case (k, v) => c.set(k, v) }
     c
@@ -83,11 +94,5 @@ object TableEnumerator {
         .filter(s => !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
         .flatMap(s => if (s.isDirectory) dataFiles(conf, s.getPath) else Seq(s.getPath))
         .toSeq
-  }
-
-  private def footerCount(conf: Configuration, file: Path): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try reader.getRecordCount
-    finally reader.close()
   }
 }

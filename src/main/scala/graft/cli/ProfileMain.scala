@@ -8,9 +8,11 @@ import graft.render.TableRenderer
   * (`/root/reference/src/listTables.tsx:503-529`).
   *
   * Usage: `ProfileMain --data=/root/testdata/sf0.001 [--exact]
-  * [--footer-stats] [--threads=32]` — `--footer-stats` answers
-  * numeric/date ranges and row counts from parquet footers (DSv2
-  * aggregate pushdown, zero rows scanned; see Profiler.profileEntryFooter)
+  * [--footer-stats] [--threads=32]` — `--footer-stats` reads each data
+  * file's parquet footer once for the schema, the row count and every
+  * range the footer statistics serve exactly (zero rows scanned, no Spark
+  * job below 64 files); only the remaining columns are scanned (see
+  * Profiler.profileEntryFooter)
   *
   * Flags follow the reference's `parseArgs` shapes (`--flag`, `--key=value`,
   * listTables.tsx:203-216). Top-level failures print to stderr and set a

@@ -67,8 +67,7 @@ object Profiler {
         ColumnClassifier.isTimeOfDay(f))
     }
     val aggs = classed.flatMap {
-      case (f, ColumnClass.Numeric | ColumnClass.Temporal | ColumnClass.TemporalNanos |
-               ColumnClass.TemporalTime) =>
+      case (f, cls) if ranged(cls) =>
         Seq(min(q(f.name)).as(s"min__${f.name}"), max(q(f.name)).as(s"max__${f.name}"))
       case (f, ColumnClass.Bool) =>
         // `col IS TRUE` / `col IS FALSE` tri-state semantics (listTables.tsx:314-315):
@@ -91,27 +90,36 @@ object Profiler {
       nanosCols: Set[String] = Set.empty): TableProfile = {
     val (aggs, classed) = fusedAggs(df.schema, nanosCols)
     val row: Row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-
-    def opt(fieldName: String): Option[Any] = {
-      val idx = row.fieldIndex(fieldName)
-      if (row.isNullAt(idx)) None else Some(row.get(idx))
-    }
-
-    val cols = classed.map {
-      case (f, cls @ (ColumnClass.Numeric | ColumnClass.Temporal | ColumnClass.TemporalNanos |
-                      ColumnClass.TemporalTime)) =>
-        ColumnProfile(f.name, f.dataType, cls, opt(s"min__${f.name}"), opt(s"max__${f.name}"), None, None)
-      case (f, ColumnClass.Bool) =>
-        ColumnProfile(f.name, f.dataType, ColumnClass.Bool, None, None,
-          opt(s"true__${f.name}").map(_.asInstanceOf[Long]),
-          opt(s"false__${f.name}").map(_.asInstanceOf[Long]))
-      case (f, cls) => ColumnProfile(f.name, f.dataType, cls, None, None, None, None)
-    }
-
+    val cols = columnProfiles(classed, cell(row))
     val rows =
       if (exact) ExactRows(row.getLong(row.fieldIndex("rows__")))
       else EstimatedRows(math.max(0L, estimatedRows)) // GREATEST(…, 0) clamp (listTables.tsx:339)
     TableProfile(schemaName, tableName, df.schema.length, rows, cols)
+  }
+
+  /** Column classes that get a MIN–MAX range. */
+  private def ranged(cls: ColumnClass): Boolean = cls match {
+    case ColumnClass.Numeric | ColumnClass.Temporal | ColumnClass.TemporalNanos |
+         ColumnClass.TemporalTime => true
+    case _ => false
+  }
+
+  /** Profiles of classified columns, each statistic looked up by its
+    * [[fusedAggs]] alias (`min__c`, `max__c`, `true__c`, `false__c`). */
+  private def columnProfiles(classed: Seq[(StructField, ColumnClass)],
+      value: String => Option[Any]): Seq[ColumnProfile] = classed.map {
+    case (f, cls) if ranged(cls) =>
+      ColumnProfile(f.name, f.dataType, cls, value(s"min__${f.name}"), value(s"max__${f.name}"), None, None)
+    case (f, ColumnClass.Bool) =>
+      ColumnProfile(f.name, f.dataType, ColumnClass.Bool, None, None,
+        value(s"true__${f.name}").map(_.asInstanceOf[Long]),
+        value(s"false__${f.name}").map(_.asInstanceOf[Long]))
+    case (f, cls) => ColumnProfile(f.name, f.dataType, cls, None, None, None, None)
+  }
+
+  private def cell(row: Row)(fieldName: String): Option[Any] = {
+    val idx = row.fieldIndex(fieldName)
+    if (row.isNullAt(idx)) None else Some(row.get(idx))
   }
 
   /** Profile every table under a data root.
@@ -155,15 +163,15 @@ object Profiler {
         TableProfile(e.schema, e.name, 0, CountError, Seq.empty)
     }
 
-  /** FOOTER-MODE profile of one table: MIN/MAX of pushdown-eligible columns
-    * (numerics/dates — [[FooterAgg.pushable]]) and the row count come from
-    * parquet footer statistics via DSv2 aggregate pushdown, and the
-    * NON-pushable range types (timestamp/timestamp_ntz) are answered by
-    * reading footer statistics directly ([[FooterAgg.footerMinMax]]) — so
-    * every range column is served with ZERO rows scanned. A residual fused
-    * scan remains only for boolean tri-state counts (no footer form) or a
-    * file with unusable stats. Same TableProfile out, so the renderer and
-    * goldens are unaffected. This is the engine's literal analog of the
+  /** FOOTER-MODE profile of one table: one read of each data file's
+    * parquet footer ([[FooterAgg.read]]) serves the schema, the row count
+    * and the MIN/MAX of every column whose footer statistics are exact —
+    * zero rows scanned and, below the distribution threshold, zero Spark
+    * jobs. A residual fused scan remains only for boolean tri-state counts
+    * (no footer form) and the range columns the footers cannot serve
+    * (strings, decimals, unsigned ints, missing or dropped stats, dates
+    * before the calendar cutover). Same TableProfile out, so the renderer
+    * and goldens are unaffected. This is the engine's literal analog of the
     * reference's "single, fast catalog query" estimated mode
     * (`/root/reference/README.md:8`) — except the footer numbers are exact,
     * not planner estimates. */
@@ -172,70 +180,22 @@ object Profiler {
       e: CatalogEntry,
       nanosCols: Set[String]): TableProfile =
     Try {
-      val df = spark.read.parquet(e.path)
-      val classed = df.schema.fields.toSeq.map { f =>
-        f -> ColumnClassifier.classify(f.dataType, nanosCols.contains(f.name))
+      val footers = FooterAgg.read(spark, e.path)
+      val (_, classed) = fusedAggs(footers.schema, nanosCols)
+      val residual = classed.collect {
+        case (f, cls) if cls == ColumnClass.Bool || (ranged(cls) && !footers.ranges.contains(f.name)) => f
       }
-      def profiled(cls: ColumnClass): Boolean = cls match {
-        case ColumnClass.Numeric | ColumnClass.Temporal | ColumnClass.TemporalNanos => true
-        case _ => false
-      }
-      val footerCols = classed.collect {
-        case (f, cls) if profiled(cls) && FooterAgg.pushable(f.dataType) => f.name
-      }
-      val footerRow: Row = FooterAgg.stats(spark, e.path, footerCols).collect()(0)
-      def footerOpt(fieldName: String): Option[Any] = {
-        val idx = footerRow.fieldIndex(fieldName)
-        if (footerRow.isNullAt(idx)) None else Some(footerRow.get(idx))
-      }
-      // non-pushable profiled columns (timestamp/timestamp_ntz): try the
-      // DIRECT footer statistics first — with them served, the only class
-      // still needing rows is Bool (tri-state counts have no footer form)
-      val nonPushable = classed.collect {
-        case (f, cls) if profiled(cls) && !FooterAgg.pushable(f.dataType) => f.name
-      }
-      val directFooter: Map[String, Option[(Any, Any)]] =
-        FooterAgg.footerMinMax(spark, e.path, nonPushable)
-      // residual scan only for profiled columns NEITHER footer path serves
-      val residual = classed.filter {
-        case (f, cls) => (profiled(cls) && !FooterAgg.pushable(f.dataType) &&
-          !directFooter.contains(f.name)) || cls == ColumnClass.Bool
-      }
-      val residualRow: Option[Row] =
-        if (residual.isEmpty) None
+      val scanned: String => Option[Any] =
+        if (residual.isEmpty) _ => None
         else {
-          val aggs = residual.flatMap {
-            case (f, ColumnClass.Bool) => Seq(
-              sum(when(q(f.name) <=> lit(true), 1L).otherwise(0L)).as(s"true__${f.name}"),
-              sum(when(q(f.name) <=> lit(false), 1L).otherwise(0L)).as(s"false__${f.name}"))
-            case (f, _) =>
-              Seq(min(q(f.name)).as(s"min__${f.name}"), max(q(f.name)).as(s"max__${f.name}"))
-          }
-          Some(df.agg(aggs.head, aggs.tail: _*).collect()(0))
+          val (aggs, _) = fusedAggs(StructType(residual), nanosCols)
+          cell(spark.read.parquet(e.path).agg(aggs.head, aggs.tail: _*).collect()(0))
         }
-      def resOpt(fieldName: String): Option[Any] = residualRow.flatMap { r =>
-        val idx = r.fieldIndex(fieldName)
-        if (r.isNullAt(idx)) None else Some(r.get(idx))
-      }
-      val cols = classed.map {
-        case (f, cls) if profiled(cls) && FooterAgg.pushable(f.dataType) =>
-          ColumnProfile(f.name, f.dataType, cls,
-            footerOpt(s"min_${f.name}"), footerOpt(s"max_${f.name}"), None, None)
-        case (f, cls) if profiled(cls) =>
-          directFooter.get(f.name) match {
-            case Some(served) => ColumnProfile(f.name, f.dataType, cls,
-              served.map(_._1), served.map(_._2), None, None)
-            case None => ColumnProfile(f.name, f.dataType, cls,
-              resOpt(s"min__${f.name}"), resOpt(s"max__${f.name}"), None, None)
-          }
-        case (f, ColumnClass.Bool) =>
-          ColumnProfile(f.name, f.dataType, ColumnClass.Bool, None, None,
-            resOpt(s"true__${f.name}").map(_.asInstanceOf[Long]),
-            resOpt(s"false__${f.name}").map(_.asInstanceOf[Long]))
-        case (f, cls) => ColumnProfile(f.name, f.dataType, cls, None, None, None, None)
-      }
-      val nRows = footerRow.getLong(footerRow.fieldIndex("n_rows"))
-      TableProfile(e.schema, e.name, df.schema.length, EstimatedRows(math.max(0L, nRows)), cols)
+      val served: Map[String, Option[Any]] = footers.ranges.toSeq.flatMap { case (c, range) =>
+        Seq(s"min__$c" -> range.map(_._1), s"max__$c" -> range.map(_._2))
+      }.toMap
+      TableProfile(e.schema, e.name, footers.schema.length, EstimatedRows(footers.rows),
+        columnProfiles(classed, alias => served.getOrElse(alias, scanned(alias))))
     } match {
       case Success(p) => p
       case Failure(_) => TableProfile(e.schema, e.name, 0, CountError, Seq.empty)
