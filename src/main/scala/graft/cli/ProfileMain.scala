@@ -1,5 +1,7 @@
 package graft.cli
 
+import org.apache.spark.sql.SparkSession
+
 import graft.GraftSession
 import graft.profile.Profiler
 import graft.render.TableRenderer
@@ -7,12 +9,10 @@ import graft.render.TableRenderer
 /** CLI entry — the engine's analog of the reference's `listTables()`
   * (`/root/reference/src/listTables.tsx:503-529`).
   *
-  * Usage: `ProfileMain --data=/root/testdata/sf0.001 [--exact]
-  * [--footer-stats] [--threads=32]` — `--footer-stats` reads each data
-  * file's parquet footer once for the schema, the row count and every
-  * range the footer statistics serve exactly (zero rows scanned, no Spark
-  * job below 64 files); only the remaining columns are scanned (see
-  * Profiler.profileEntryFooter)
+  * Usage: `ProfileMain [--data=DIR] [--exact] [--json | --color]
+  * [--threads=32]`, DIR defaulting to the sf0.001 fixture. Estimated mode
+  * (the default) answers from parquet footers plus a residual scan;
+  * `--exact` reads every row (see Profiler.profileRoot).
   *
   * Flags follow the reference's `parseArgs` shapes (`--flag`, `--key=value`,
   * listTables.tsx:203-216). Top-level failures print to stderr and set a
@@ -36,29 +36,29 @@ object ProfileMain {
     // stores them in `options` and nothing below consumes them — the same
     // accept-silently-and-ignore behavior, pinned by ProfileCliSpec so a
     // future flag-validation pass can't accidentally start rejecting them.
+    // So is `--footer-stats`: estimated mode already is the footer path.
     try {
       val args = parseArgs(argv.toSeq)
       val data = args.options.getOrElse("data", "/root/testdata/sf0.001")
-      val exact = args.flags.contains("exact")
       // inside the try: a junk --threads=lots must take the documented
       // stderr + exit-1 path, not an uncaught NumberFormatException
       val threads = args.options.get("threads").map(_.toInt).getOrElse(32)
       val spark = GraftSession.local(threads)
-      try {
-        val profiles =
-          if (args.flags.contains("footer-stats")) Profiler.profileRootFooter(spark, data)
-          else Profiler.profileRoot(spark, data, exact)
-        if (args.flags.contains("json")) print(TableRenderer.renderJson(profiles))
-        else {
-          val mode = if (exact) TableRenderer.Exact else TableRenderer.Estimated
-          if (args.flags.contains("color")) print(TableRenderer.renderColor(profiles, mode))
-          else print(TableRenderer.render(profiles, mode))
-        }
-      } finally spark.stop()
+      try print(run(spark, data, args)) finally spark.stop()
     } catch {
       case e: Throwable =>
         System.err.println(s"Failed to list tables: ${e.getMessage}")
         sys.exit(1)
     }
+  }
+
+  /** The catalog profile of `data`, in the mode and format `args` ask for. */
+  def run(spark: SparkSession, data: String, args: Args): String = {
+    val exact = args.flags.contains("exact")
+    val profiles = Profiler.profileRoot(spark, data, exact)
+    val mode = if (exact) TableRenderer.Exact else TableRenderer.Estimated
+    if (args.flags.contains("json")) TableRenderer.renderJson(profiles)
+    else if (args.flags.contains("color")) TableRenderer.renderColor(profiles, mode)
+    else TableRenderer.render(profiles, mode)
   }
 }

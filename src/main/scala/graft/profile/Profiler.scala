@@ -2,7 +2,7 @@ package graft.profile
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,7 +47,8 @@ case class TableProfile(
   * column's MIN/MAX and every boolean histogram in ONE fused `agg()` — a
   * single column-pruned scan per table, partial-aggregated map-side, with one
   * tiny shuffle to the final aggregate. At 100 TB that's the difference
-  * between k scans and 1.
+  * between k scans and 1. That scan is exact mode; estimated mode reads
+  * parquet footers first and scans only the columns they cannot serve.
   */
 object Profiler {
 
@@ -80,21 +81,16 @@ object Profiler {
     (aggs :+ count(lit(1)).as("rows__"), classed)
   }
 
-  /** Profile one DataFrame in a single pass. */
+  /** Profile one DataFrame in a single pass, with its exact row count. */
   def profileDataFrame(
       df: DataFrame,
       schemaName: String,
       tableName: String,
-      exact: Boolean,
-      estimatedRows: => Long,
       nanosCols: Set[String] = Set.empty): TableProfile = {
     val (aggs, classed) = fusedAggs(df.schema, nanosCols)
     val row: Row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val cols = columnProfiles(classed, cell(row))
-    val rows =
-      if (exact) ExactRows(row.getLong(row.fieldIndex("rows__")))
-      else EstimatedRows(math.max(0L, estimatedRows)) // GREATEST(…, 0) clamp (listTables.tsx:339)
-    TableProfile(schemaName, tableName, df.schema.length, rows, cols)
+    TableProfile(schemaName, tableName, df.schema.length,
+      ExactRows(row.getLong(row.fieldIndex("rows__"))), columnProfiles(classed, cell(row)))
   }
 
   /** Column classes that get a MIN–MAX range. */
@@ -128,7 +124,8 @@ object Profiler {
     * interleaves the per-table jobs across executor slots) — unlike the
     * reference's strictly sequential per-column loop. Per-table errors are
     * isolated, mirroring listTables.tsx:248-250,485-487: a broken table yields
-    * `CountError`/empty stats instead of killing the run.
+    * `CountError`/empty stats instead of killing the run. Estimated mode:
+    * [[profileEntryFooter]]; exact mode: [[profileEntryExact]].
     */
   def profileRoot(
       spark: SparkSession,
@@ -141,29 +138,27 @@ object Profiler {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val futures = entries.map { e =>
-        Future(profileEntry(spark, e, exact, nanosColumns.getOrElse(e.name, Set.empty)))
+        val nanosCols = nanosColumns.getOrElse(e.name, Set.empty[String])
+        Future(if (exact) profileEntryExact(spark, e, nanosCols) else profileEntryFooter(spark, e, nanosCols))
       }
       futures.map(f => Await.result(f, Duration.Inf))
     } finally pool.shutdown()
   }
 
-  private def profileEntry(
+  /** EXACT-MODE profile of one table: COUNT(*) and the fused MIN/MAX and
+    * boolean aggregate over every row — the reference the footer path is
+    * tested against. The schema comes from the table's footers
+    * ([[FooterAgg.read]]), so Spark runs no schema-inference job. */
+  private def profileEntryExact(
       spark: SparkSession,
       e: CatalogEntry,
-      exact: Boolean,
       nanosCols: Set[String]): TableProfile =
-    Try {
-      val df = spark.read.parquet(e.path)
-      profileDataFrame(df, e.schema, e.name, exact,
-        estimatedRows = TableEnumerator.footerRowCount(spark, e.path), nanosCols)
-    } match {
-      case Success(p) => p
-      case Failure(_) =>
-        // Error isolation: still emit the table with an error-marked count.
-        TableProfile(e.schema, e.name, 0, CountError, Seq.empty)
+    isolated(e) {
+      val df = spark.read.schema(FooterAgg.read(spark, e.path).schema).parquet(e.path)
+      profileDataFrame(df, e.schema, e.name, nanosCols)
     }
 
-  /** FOOTER-MODE profile of one table: one read of each data file's
+  /** ESTIMATED-MODE profile of one table: one read of each data file's
     * parquet footer ([[FooterAgg.read]]) serves the schema, the row count
     * and the MIN/MAX of every column whose footer statistics are exact —
     * zero rows scanned and, below the distribution threshold, zero Spark
@@ -179,7 +174,7 @@ object Profiler {
       spark: SparkSession,
       e: CatalogEntry,
       nanosCols: Set[String]): TableProfile =
-    Try {
+    isolated(e) {
       val footers = FooterAgg.read(spark, e.path)
       val (_, classed) = fusedAggs(footers.schema, nanosCols)
       val residual = classed.collect {
@@ -189,24 +184,26 @@ object Profiler {
         if (residual.isEmpty) _ => None
         else {
           val (aggs, _) = fusedAggs(StructType(residual), nanosCols)
-          cell(spark.read.parquet(e.path).agg(aggs.head, aggs.tail: _*).collect()(0))
+          cell(spark.read.schema(footers.schema).parquet(e.path).agg(aggs.head, aggs.tail: _*).collect()(0))
         }
       val served: Map[String, Option[Any]] = footers.ranges.toSeq.flatMap { case (c, range) =>
         Seq(s"min__$c" -> range.map(_._1), s"max__$c" -> range.map(_._2))
       }.toMap
       TableProfile(e.schema, e.name, footers.schema.length, EstimatedRows(footers.rows),
         columnProfiles(classed, alias => served.getOrElse(alias, scanned(alias))))
-    } match {
-      case Success(p) => p
-      case Failure(_) => TableProfile(e.schema, e.name, 0, CountError, Seq.empty)
     }
 
-  /** Footer-mode profile of every table under a data root (opt-in via
-    * `ProfileMain --footer-stats`). */
+  /** Error isolation: a table that fails to profile is still emitted, with
+    * an error-marked count. */
+  private def isolated(e: CatalogEntry)(profile: => TableProfile): TableProfile =
+    Try(profile).getOrElse(TableProfile(e.schema, e.name, 0, CountError, Seq.empty))
+
+  /** The estimated-mode profile of every table: an alias of
+    * `profileRoot(exact = false)`, kept for the benchmark's `catalog_footer`
+    * op. */
   def profileRootFooter(
       spark: SparkSession,
       root: String,
       nanosColumns: Map[String, Set[String]] = DefaultNanosColumns): Seq[TableProfile] =
-    TableEnumerator.list(spark, root).map(e =>
-      profileEntryFooter(spark, e, nanosColumns.getOrElse(e.name, Set.empty)))
+    profileRoot(spark, root, exact = false, nanosColumns)
 }

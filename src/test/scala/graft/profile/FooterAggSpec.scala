@@ -70,12 +70,27 @@ class FooterAggSpec extends AnyFunSuite {
   }
 
   test("footer-mode profile renders identically to the scan-mode estimated profile") {
-    val scan = Profiler.profileRoot(spark, SparkSuite.Sf0001, exact = false)
+    val scan = FooterAggSpec.asEstimated(Profiler.profileRoot(spark, SparkSuite.Sf0001, exact = true))
     val footer = Profiler.profileRootFooter(spark, SparkSuite.Sf0001)
     val scanText = graft.render.TableRenderer.render(scan, graft.render.TableRenderer.Estimated)
     val footerText = graft.render.TableRenderer.render(footer, graft.render.TableRenderer.Estimated)
     assert(footerText == scanText)
     assert(footerText.contains("Tables"))
+  }
+
+  test("estimated profileRoot launches no job on sf0.001; exact launches two per table, no inference") {
+    val tables = TableEnumerator.list(spark, SparkSuite.Sf0001).size
+    val (est, estJobs) = FooterAggSpec.jobsOf(spark, "estimated_root") {
+      Profiler.profileRoot(spark, SparkSuite.Sf0001, exact = false)
+    }
+    assert(estJobs == 0, s"estimated mode launched $estJobs jobs; no sf0.001 table has a residual column")
+    assert(est.size == tables && est.forall(_.rows.isInstanceOf[EstimatedRows]))
+    val (exact, exactJobs) = FooterAggSpec.jobsOf(spark, "exact_root") {
+      Profiler.profileRoot(spark, SparkSuite.Sf0001, exact = true)
+    }
+    // per table: the AQE map stage and the result of the fused aggregate
+    assert(exactJobs == 2 * tables, s"exact mode launched $exactJobs jobs over $tables tables")
+    assert(exact.size == tables && exact.forall(_.rows.isInstanceOf[ExactRows]))
   }
 
   test("estimated rendering is identical across the <=64-file and distributed footer branches") {
@@ -101,7 +116,7 @@ class FooterAggSpec extends AnyFunSuite {
       Profiler.profileRootFooter(spark, root)
     }
     assert(jobs == 1, s"footer mode launched $jobs jobs, not the one distributed footer read")
-    val scan = Profiler.profileRoot(spark, root, exact = false)
+    val scan = FooterAggSpec.asEstimated(Profiler.profileRoot(spark, root, exact = true))
     val footerText = graft.render.TableRenderer.render(footer, graft.render.TableRenderer.Estimated)
     val scanText = graft.render.TableRenderer.render(scan, graft.render.TableRenderer.Estimated)
     assert(footerText.contains("~8000"), footerText)
@@ -111,6 +126,14 @@ class FooterAggSpec extends AnyFunSuite {
 }
 
 object FooterAggSpec {
+
+  /** `profiles` with each exact row count re-marked as estimated, so a
+    * full scan's counts compare by value with estimated mode's and render
+    * under the same header. */
+  def asEstimated(profiles: Seq[TableProfile]): Seq[TableProfile] = profiles.map(p => p.rows match {
+    case ExactRows(n) => p.copy(rows = EstimatedRows(n))
+    case _ => p
+  })
 
   /** `body`'s result and the Spark jobs it launches under job group
     * `group`. A sentinel job in a second group follows it; the listener bus

@@ -1,14 +1,15 @@
 package graft.profile
 
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
 import graft.render.TableRenderer
 
-/** Footer mode against the scan-mode estimated profile, type by type, on
-  * Spark-written tables: every column renders the same cells, and each
-  * column is pinned to the path that served it (footer statistics or the
-  * residual scan). */
+/** Estimated mode (the footer path) against exact mode (the full scan),
+  * type by type, on Spark-written tables: every column renders the same
+  * cells, and each column is pinned to the path that served it (footer
+  * statistics or the residual scan). */
 class FooterTypeParitySpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
@@ -21,11 +22,11 @@ class FooterTypeParitySpec extends AnyFunSuite {
     path
   }
 
-  /** Every column's rendered cells, footer mode vs scan mode, plus the
-    * whole render. */
+  /** Every column's rendered cells, footer mode vs the exact scan, plus the
+    * whole render; row counts compare by value. */
   private def assertParity(root: String): Unit = {
     val footer = Profiler.profileRootFooter(spark, root)
-    val scan = Profiler.profileRoot(spark, root, exact = false)
+    val scan = FooterAggSpec.asEstimated(Profiler.profileRoot(spark, root, exact = true))
     assert(footer.map(_.rows) == scan.map(_.rows))
     footer.zip(scan).foreach { case (f, s) =>
       assert(f.columns.map(_.name) == s.columns.map(_.name))
@@ -78,10 +79,23 @@ class FooterTypeParitySpec extends AnyFunSuite {
 
   test("a partitioned table keeps its partition column") {
     val root = java.nio.file.Files.createTempDirectory("footer_part").toString
+    val path = s"$root/parted.parquet"
     spark.range(0, 12).selectExpr("id AS k", "CAST(id % 3 AS INT) AS part")
-      .write.partitionBy("part").mode("overwrite").parquet(s"$root/parted.parquet")
+      .write.partitionBy("part").mode("overwrite").parquet(path)
     val footer = Profiler.profileRootFooter(spark, root)
     assert(footer.head.columns.map(_.name) == Seq("k", "part"))
     assertParity(root)
+    // exact mode reads with the footer-supplied schema: the `part=v`
+    // column keeps its inferred type, and the rows are Spark's own
+    val inferred = spark.read.parquet(path)
+    val schema = FooterAgg.read(spark, path).schema
+    assert(schema == inferred.schema)
+    val exact = Profiler.profileRoot(spark, root, exact = true).head
+    assert(exact.columns.map(c => c.name -> c.dataType) == Seq("k" -> LongType, "part" -> IntegerType))
+    assert(exact.rows == ExactRows(12L))
+    val part = exact.columns.find(_.name == "part").get
+    assert((part.min, part.max) == (Some(0), Some(2)))
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(sorted(spark.read.schema(schema).parquet(path)) == sorted(inferred))
   }
 }

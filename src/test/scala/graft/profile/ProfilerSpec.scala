@@ -12,7 +12,7 @@ class ProfilerSpec extends AnyFunSuite {
 
   test("orders sf0.001: fused single-pass profile has correct count, ranges, classes") {
     val df = spark.read.parquet(s"${SparkSuite.Sf0001}/orders.parquet")
-    val p = Profiler.profileDataFrame(df, "public", "orders", exact = true, estimatedRows = 0L)
+    val p = Profiler.profileDataFrame(df, "public", "orders")
     assert(p.rows == ExactRows(1500L))
     assert(p.columnCount == 6)
     val byName = p.columns.map(c => c.name -> c).toMap
@@ -35,7 +35,7 @@ class ProfilerSpec extends AnyFunSuite {
     val rows = Seq(Some(true), Some(true), Some(false), None, None).map(v =>
       Row(v.map(java.lang.Boolean.valueOf).orNull))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    val p = Profiler.profileDataFrame(df, "t", "bools", exact = true, estimatedRows = 0L)
+    val p = Profiler.profileDataFrame(df, "t", "bools")
     val c = p.columns.head
     assert(c.clazz == ColumnClass.Bool)
     assert(c.trueCount.contains(2L))
@@ -52,8 +52,7 @@ class ProfilerSpec extends AnyFunSuite {
     // synthetic column instead
     import spark.implicits._
     val df = Seq(1704067200000000000L, 1706745600000000000L).toDF("ts")
-    val p = Profiler.profileDataFrame(df, "public", "nanos_t", exact = true,
-      estimatedRows = 0L, nanosCols = Set("ts"))
+    val p = Profiler.profileDataFrame(df, "public", "nanos_t", nanosCols = Set("ts"))
     val ts = p.columns.find(_.name == "ts").get
     assert(ts.clazz == ColumnClass.TemporalNanos)
     assert(ts.min.nonEmpty && ts.max.nonEmpty)
@@ -63,8 +62,7 @@ class ProfilerSpec extends AnyFunSuite {
 
   test("fixture events.ts (timestamp_ntz) profiles as temporal natively") {
     val df = spark.read.parquet(s"${SparkSuite.Sf0001}/events.parquet")
-    val p = Profiler.profileDataFrame(df, "public", "events", exact = true,
-      estimatedRows = 0L, nanosCols = Set("ts")) // override is inert on non-Long
+    val p = Profiler.profileDataFrame(df, "public", "events", nanosCols = Set("ts")) // override is inert on non-Long
     val ts = p.columns.find(_.name == "ts").get
     assert(ts.clazz == ColumnClass.Temporal)
     val (_, _, range, _) = TableRenderer.columnCells(ts)

@@ -35,8 +35,7 @@ class JdbcTimeColumnSpec extends AnyFunSuite {
     } finally conn.close()
 
     val df = TableSources.readJdbc(spark, url, "shifts", "app", "app")
-    val profile = Profiler.profileDataFrame(
-      df, "public", "shifts", exact = true, estimatedRows = 2L)
+    val profile = Profiler.profileDataFrame(df, "public", "shifts")
 
     val byName = profile.columns.map(c => c.name -> c).toMap
     assert(byName("START_T").clazz == ColumnClass.TemporalTime)
