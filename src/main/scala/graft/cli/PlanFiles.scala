@@ -9,7 +9,8 @@ import graft.GraftSession
   * query — the per-change before/after plan artifacts the optimization
   * rounds commit under `plans/r16/` (VERDICT/judge requirement: plan
   * claims must be checkable against committed explain output). Same plan
-  * source as [[PlansDump]] (AQE-finalized, planOnly audit twins).
+  * source as [[PlansDump]] (AQE-finalized, built under the plan-audit
+  * scope).
   *
   * `PlanFiles <outDir> <tag> <name1,name2,...> [sfDir]`
   */

@@ -6,11 +6,14 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.{GraftSession, SparkEntry}
+import graft.operators.StageMemo
 
 /** Dumps the formatted physical plans of the engine's flagship queries to a
   * reviewable markdown artifact (`PLANS.md` by default) — the "is this the
   * plan you'd want at 100 TB" audit trail: broadcast placements, exchange
   * counts, pushed filters, WholeStageCodegen spans, all in one place.
+  * Queries that read memoized stages are dumped with their full lineage
+  * (see [[planFor]]).
   *
   * `PlansDump [sfDir] [outFile]`
   */
@@ -111,7 +114,7 @@ object PlansDump {
     "docs_lm_order_agreement", // two LM bucketings joined on doc_id, 9-cell agg
     "docs_trigram_buckets",    // train-split fit, 5 gram-keyed joins, backoff CASE
     "docs_lm_order_agreement3", // order-2 x order-3 buckets joined on doc_id
-    "docs_ccnet_deployed",     // DEPLOYED classify: scan + broadcast boundaries, no window
+    "docs_ccnet_deployed",     // rank calibration vs deployed threshold classify, per-lang gate
     "text_paragraph_dedup",    // ONE segmentation: per-(phash,doc) counts + phash window
     "docs_training_manifest",  // 5-gate conjunction: flag joins on 8 B keys
     "docs_classifier_auc",     // grouped-midrank U over distinct (lang, score) rows
@@ -143,59 +146,14 @@ object PlansDump {
     "text_eval_burn",          // eval-gram burn-rate: broadcast grams, one scan
     "dedup_cluster_sizes")     // size histogram over the memoized CC labels
 
-  /** Plan-audit overrides: these queries' gated implementations read
-    * memoized materialized stages (the shared-pipeline design — see
-    * `Dedup.sharedVerifiedPairs`), so their own plans are a checkpoint
-    * scan + the final derivation. The declarative builders below show the
-    * full pipeline plan that the materialization runs once. */
-  private val planOnly: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    Map(
-      "dedup_minhash_pairs" -> (graft.operators.Dedup.minhashCandidatePairsPlan(_, _)),
-      "text_dup_spans" -> (graft.operators.TextAnalysis.dupSpansPlan(_, _)),
-      "docs_ccnet_buckets" -> (graft.operators.TextAnalysis.unigramSurprisalPlan(_, _)),
-      "docs_bigram_buckets" -> (graft.operators.TextAnalysis.bigramSurprisalPlan(_, _)),
-      "docs_trigram_buckets" -> (graft.operators.TextAnalysis.trigramSurprisalPlan(_, _)),
-      // the audit target is the PRODUCTION classify lineage (broadcast
-      // boundaries, window-free) — the gated row is the consistency table
-      "docs_ccnet_deployed" -> (graft.operators.TextAnalysis.ccnetDeployedClassifyPlan(_, _)),
-      "docs_dsir_importance" -> (graft.operators.DataSelection.dsirImportancePlan(_, _)),
-      "quality_classifier_confusion" -> (graft.operators.QualityClassifier.classifierConfusionPlan(_, _)),
-      "docs_classifier_auc" -> (graft.operators.QualityClassifier.classifierAucPlan(_, _)),
-      "profile_catalog_long" -> (graft.profile.ProfileQueries.catalogProfilePlan(_, _)),
-      "profile_catalog_strings" -> (graft.profile.ProfileQueries.catalogStringProfilePlan(_, _)),
-      "profile_pk_discovery" -> (graft.profile.ProfileQueries.pkDiscoveryPlan(_, _)),
-      "text_paragraph_dedup" -> (graft.operators.TextAnalysis.paragraphDedupPlan(_, _)),
-      // pins k: the gated form's auto-k count() is an eager action at
-      // plan-construction time (ADVICE r7); plan shape is identical
-      "semdedup" -> (graft.operators.Similarity.semDedupPlan(_, _)),
-      // r16: covariance sums are memoized stages shared with top_pc — the
-      // audit target is the full scan+pair-product lineage
-      "embedding_corr_dims" -> (graft.operators.Similarity.dimCorrMatrixPlan(_, _)),
-      // r16: these materialize a shared derived frame once (lazy
-      // localCheckpoint) because several plan branches read it — the audit
-      // target is the full lineage that materialization runs
-      "profile_gini_lineitem" -> (graft.profile.ProfileQueries.giniProfilePlan(_, _)),
-      "docs_target_affinity" -> (graft.operators.TextAnalysis.targetAffinityPlan(_, _)),
-      "profile_weighted_percentiles" -> (graft.profile.ProfileQueries.weightedPercentilesPlan(_, _)),
-      "q_market_basket" -> (graft.operators.RelationalExt.marketBasketPlan(_, _)),
-      "events_max_concurrency" -> (graft.operators.EventOps.maxConcurrencyPlan(_, _)),
-      // r17: domain-bounded shared frames materialized once (lazy
-      // localCheckpoint) for their N reader branches — audit target is the
-      // full lineage; the executed plans (plans/r17/*_exec_after.txt) show
-      // the checkpoint reads
-      "events_transition_matrix" -> (graft.operators.EventOps.transitionMatrixPlan(_, _)),
-      "events_wavelet_energy" -> (graft.operators.EventOps.waveletEnergyPlan(_, _)),
-      "events_rolling_wau_sketch" -> (graft.operators.EventOps.rollingWauSketchGatePlan(_, _)),
-      "events_busy_window_sessions" -> (graft.operators.EventOps.busyWindowSessionsPlan(_, _)),
-      "text_source_tv_distance" -> (graft.operators.TextAnalysis.sourceTvDistancePlan(_, _)),
-      "dedup_fuzzy_names" -> (graft.operators.Dedup.fuzzyNamePairsPlan(_, _)))
-
-  /** The AQE-finalized formatted plan of one declared query (or its
-    * [[planOnly]] audit twin) — shared by the PLANS.md dump and the
-    * per-query plan files ([[PlanFiles]], the r16 before/after artifacts). */
+  /** The AQE-finalized formatted plan of one declared query, built under
+    * [[graft.operators.StageMemo.audit]] so memoized stages and in-query
+    * shared frames show their full lineage instead of checkpoint scans —
+    * shared by the PLANS.md dump and the per-query plan files
+    * ([[PlanFiles]], the r16 before/after artifacts). */
   private[cli] def planFor(spark: org.apache.spark.sql.SparkSession,
       name: String, dir: String): String = {
-    val df = planOnly.getOrElse(name, SparkEntry.queries(name))(spark, dir)
+    val df = StageMemo.audit(SparkEntry.queries(name)(spark, dir))
     df.collect() // let AQE finalize the executed plan
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }

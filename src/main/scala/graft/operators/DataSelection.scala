@@ -129,12 +129,6 @@ object DataSelection {
   def dsirImportance(spark: SparkSession, dir: String): DataFrame =
     perDocMemo(spark, dir).orderBy("doc_id")
 
-  /** Un-checkpointed twin for plan audits ([[TextAnalysis.unigramSurprisalPlan]]
-    * pattern): the gated form's checkpoint collapses the upstream to an RDD
-    * scan in explain output. */
-  private[graft] def dsirImportancePlan(spark: SparkSession, dir: String): DataFrame =
-    dsirPerDoc(featureCounts(spark, dir)).orderBy("doc_id")
-
   /** Stratified selection summary per source: top ceil(n/10) docs by
     * (weight_micro desc, doc_id) within each source, with the selected
     * slice's mean weight and feature-mass share. All integer-exact. */

@@ -368,9 +368,8 @@ object Dedup {
   private[operators] def sharedScoredCandidates(spark: SparkSession, dir: String): DataFrame =
     memoStage(spark, dir, "scored")(scoredCandidatesBuild(spark, dir))
 
-  /** Un-memoized builder of the scored stage (extracted r16 so the build
-    * plan is dumpable for the plans/ audit). */
-  private[operators] def scoredCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
+  /** Un-memoized builder of the scored stage. */
+  private def scoredCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
     val docs = shingleSets(spark, dir)
       .join(sharedSignatures(spark, dir), "doc_id")
       .localCheckpoint(true) // transient; ContextCleaner frees the blocks
@@ -405,29 +404,11 @@ object Dedup {
       .filter(col("jaccard") >= 0.5)
       .select("id_a", "id_b", "jaccard")
 
-  /** LSH band table: (doc_id, band, band_hash) — one row per band per doc.
-    * Docs with <3 words have no shingles and drop out (null signature).
-    * Declarative (un-memoized) form, kept for plan audits and specs; the
-    * query path derives bands from [[sharedSignatures]]. */
-  def minhashBands(spark: SparkSession, dir: String): DataFrame = {
-    val withSig = corpusWithNearDups(spark, dir)
-      .filter(hasShingles(col("text")))
-      .withColumn("sh", shingles(col("text")))
-    bandsFromSig(withSig.select(col("doc_id"),
-      graft.functions.VectorExpressions.minhash_sig(col("sh"), NumHashes).as("sig")))
-  }
-
   /** MinHash/LSH candidate pairs: same (band, band_hash) bucket, distinct.
     * The shuffle key is the 16-byte band hash — linear in data, never n².
     * Reads the materialized [[sharedCandidatePairs]] stage. */
   def minhashCandidatePairs(spark: SparkSession, dir: String): DataFrame =
     sharedCandidatePairs(spark, dir).orderBy("id_a", "id_b")
-
-  /** Fully declarative candidate-pair plan (no materialized stages), for
-    * the PLANS.md audit: shows the complete shingle → signature → band
-    * self-join pipeline that [[sharedCandidatePairs]] materializes. */
-  def minhashCandidatePairsPlan(spark: SparkSession, dir: String): DataFrame =
-    bandPairs(minhashBands(spark, dir)).orderBy("id_a", "id_b")
 
   /** The same signature/band/pair pipeline in DuckDB SQL. */
   val minhashCandidatePairsOracle: String = {
@@ -2034,15 +2015,7 @@ object Dedup {
     * exact-dedup family's job. Like the other dedup demos the fixture
     * plants its own near-dups: every name's copy with the last character
     * replaced by 'q', distance 1 from its source. */
-  def fuzzyNamePairs(spark: SparkSession, dir: String): DataFrame =
-    fuzzyNamePairsImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def fuzzyNamePairsPlan(spark: SparkSession, dir: String): DataFrame =
-    fuzzyNamePairsImpl(spark, dir, materialize = false)
-
-  private def fuzzyNamePairsImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def fuzzyNamePairs(spark: SparkSession, dir: String): DataFrame = {
     val names = table(spark, dir, "part")
       .groupBy(col("p_name").as("name")).agg(count(lit(1)).as("n_rows"))
     val perturbed = names.select(
@@ -2057,7 +2030,7 @@ object Dedup {
     // scored-stage pattern) — without materialization the name
     // aggregation + perturbation union ran once per side (r17; plan:
     // 4 part scans → 1)
-    val allM = if (materialize) all.localCheckpoint(false) else all
+    val allM = StageMemo.shared(all)
     val a = allM.select(col("blk_len"), col("blk_word"),
       col("name").as("name_a"), col("n_rows").as("rows_a"))
     val b = allM.select(col("blk_len"), col("blk_word"),

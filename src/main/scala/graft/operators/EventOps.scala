@@ -1832,16 +1832,7 @@ object EventOps {
     * the user partitioning IS the 100 TB partitioning. Ties at equal
     * timestamps break on event_id (total order both engines). Share is
     * exact-integer-double division. */
-  def transitionMatrix(spark: SparkSession, dir: String): DataFrame =
-    transitionMatrixImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits ([[maxConcurrencyPlan]] pattern:
-    * the lazy checkpoint collapses the dumped lineage to an RDD scan). */
-  private[graft] def transitionMatrixPlan(spark: SparkSession, dir: String): DataFrame =
-    transitionMatrixImpl(spark, dir, materialize = false)
-
-  private def transitionMatrixImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def transitionMatrix(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val steps = table(spark, dir, "events")
@@ -1853,7 +1844,7 @@ object EventOps {
     // the final join — without materialization the per-user lead window
     // over the corpus ran once per branch (r17; plan: 3 event scans +
     // 3 corpus windows → 1)
-    val counts = if (materialize) counts0.localCheckpoint(false) else counts0
+    val counts = StageMemo.shared(counts0)
     val totals = counts.groupBy(col("cur").as("tc")).agg(sum(col("n")).as("tot"))
     counts.join(broadcast(totals), col("cur") === col("tc"))
       .select(col("cur"), col("nxt"), col("n"),
@@ -2087,16 +2078,7 @@ object EventOps {
     * happens. Hours with no change points carry no row (documented:
     * concurrency is constant through such hours, equal to the last
     * reported running value). */
-  def maxConcurrency(spark: SparkSession, dir: String): DataFrame =
-    maxConcurrencyOf(spark, dir, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full sessionize →
-    * sweep lineage the one-time delta materialization runs. */
-  private[graft] def maxConcurrencyPlan(spark: SparkSession, dir: String): DataFrame =
-    maxConcurrencyOf(spark, dir, materialize = false)
-
-  private def maxConcurrencyOf(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def maxConcurrency(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("tus")
     val gapUs = 30L * 60 * 1000000
@@ -2124,7 +2106,7 @@ object EventOps {
         struct((col("e_tus") + 1).as("tus"), lit(-1L).as("d")))).as("ev"))
       .groupBy(col("ev.tus").as("tus")).agg(sum(col("ev.d")).as("d"))
       .withColumn("bucket", expr(s"tus div $hourUs"))
-    val deltas = if (materialize) deltas0.localCheckpoint(false) else deltas0
+    val deltas = StageMemo.shared(deltas0)
     val wLocal = Window.partitionBy("bucket").orderBy("tus")
       .rowsBetween(Window.unboundedPreceding, 0)
     val wBucket = Window.orderBy("bucket")
@@ -2226,15 +2208,7 @@ object EventOps {
     * s_end >= w_start` theta form. Pair dedup (a session sharing k hours
     * with a window appears k times) happens on (window, user, session)
     * keys before counting. */
-  def busyWindowSessions(spark: SparkSession, dir: String): DataFrame =
-    busyWindowSessionsImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def busyWindowSessionsPlan(spark: SparkSession, dir: String): DataFrame =
-    busyWindowSessionsImpl(spark, dir, materialize = false)
-
-  private def busyWindowSessionsImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def busyWindowSessions(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hourUs = 3600L * 1000000
     val gapUs = 30L * 60 * 1000000
@@ -2246,7 +2220,7 @@ object EventOps {
     // without materialization each branch re-ran the corpus scan +
     // hourly aggregation (r17; plan: 3 event scans → 2: the session
     // branch's own pass remains)
-    val hourly = if (materialize) hourly0.localCheckpoint(false) else hourly0
+    val hourly = StageMemo.shared(hourly0)
     val tot = hourly.agg(sum(col("n")).as("total"), count(lit(1)).as("n_hours"))
     val busy = hourly.crossJoin(broadcast(tot))
       .filter(col("n") * col("n_hours") > col("total"))
@@ -2540,15 +2514,7 @@ object EventOps {
     * `Σ_even-half y − Σ_odd-half y` — one conditional aggregate per level
     * over hour-block keys, levels unioned into one DAG. Missing hours
     * count 0, exactly as a gap-filled series would. */
-  def waveletEnergy(spark: SparkSession, dir: String, levels: Int = 4): DataFrame =
-    waveletEnergyImpl(spark, dir, levels, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def waveletEnergyPlan(spark: SparkSession, dir: String): DataFrame =
-    waveletEnergyImpl(spark, dir, 4, materialize = false)
-
-  private def waveletEnergyImpl(spark: SparkSession, dir: String, levels: Int,
-      materialize: Boolean): DataFrame = {
+  def waveletEnergy(spark: SparkSession, dir: String, levels: Int = 4): DataFrame = {
     val hourly0 = table(spark, dir, "events")
       .select(col("event_type"),
         expr("unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000").as("h"))
@@ -2557,7 +2523,7 @@ object EventOps {
     // (type × calendar-hour)-bounded, read by every wavelet level —
     // without materialization the corpus scan + hourly aggregation ran
     // once per level (r17; plan: 4 event scans → 1)
-    val hourly = if (materialize) hourly0.localCheckpoint(false) else hourly0
+    val hourly = StageMemo.shared(hourly0)
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val frames = (1 to levels).map { k =>
       val block = 1L << k
@@ -3047,15 +3013,7 @@ object EventOps {
     * oracle asserts the boolean (the estimate itself is not
     * SQL-expressible). */
   def rollingWauSketchGate(spark: SparkSession, dir: String,
-      tolPct: Int = 5): DataFrame =
-    rollingWauSketchGateImpl(spark, dir, tolPct, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def rollingWauSketchGatePlan(spark: SparkSession, dir: String): DataFrame =
-    rollingWauSketchGateImpl(spark, dir, 5, materialize = false)
-
-  private def rollingWauSketchGateImpl(spark: SparkSession, dir: String,
-      tolPct: Int, materialize: Boolean): DataFrame = {
+      tolPct: Int = 5): DataFrame = {
     val perDay0 = table(spark, dir, "events")
       .select(to_date(col("ts").cast("timestamp")).as("day"), col("user_id"))
       .groupBy("day")
@@ -3064,7 +3022,7 @@ object EventOps {
     // by BOTH self-join sides — without materialization each side re-ran
     // the corpus scan + HLL aggregation (r17, the r16 batch-4 finding;
     // plan: 3 event scans → 1)
-    val perDay = if (materialize) perDay0.localCheckpoint(false) else perDay0
+    val perDay = StageMemo.shared(perDay0)
     val est = perDay.select(col("day").as("report_day"))
       .join(perDay,
         col("day").between(date_sub(col("report_day"), 6), col("report_day")))

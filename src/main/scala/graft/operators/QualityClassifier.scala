@@ -81,8 +81,7 @@ object QualityClassifier {
       docTerm: DataFrame, buckets: DataFrame): DataFrame =
     StageMemo(spark, dir, "nb_cls")(classCountsPlan(docTerm, buckets))
 
-  /** Un-memoized class counts — the plan twin's form (a memoized stage
-    * collapses to an RDD scan in explain output). */
+  /** Un-memoized class counts. */
   private def classCountsPlan(docTerm: DataFrame, buckets: DataFrame): DataFrame = {
     val labeled = buckets
       .filter(col("bucket").isin("head", "tail"))
@@ -143,23 +142,6 @@ object QualityClassifier {
     val (ratios, scal) = fit(spark, dir, docTerm, buckets)
     val scored = scoreByJoin(docTerm, ratios, scal)
     scored.join(buckets.select("doc_id", "bucket"), "doc_id")
-      .withColumn("predicted", when(col("score_micro") > DecisionMicro, "pos").otherwise("neg"))
-      .groupBy("bucket", "predicted")
-      .agg(count(lit(1)).as("n_docs"),
-        expr("CAST(sum(CAST(score_micro AS DECIMAL(38,0))) div count(1) AS BIGINT)")
-          .as("mean_score_micro"))
-      .orderBy("bucket", "predicted")
-  }
-
-  /** Un-checkpointed twin for plan audits ([[TextAnalysis.unigramSurprisalPlan]]
-    * pattern): the gated form's tokenize-once checkpoints collapse the
-    * upstream to RDD scans in explain output. */
-  private[graft] def classifierConfusionPlan(spark: SparkSession, dir: String): DataFrame = {
-    val docTerm = TextAnalysis.docTermTf(spark, dir)
-    val buckets = TextAnalysis.unigramSurprisalFrom(docTerm)
-    val (ratios, scal) = fitFrom(classCountsPlan(docTerm, buckets))
-    scoreByJoin(docTerm, ratios, scal)
-      .join(buckets.select("doc_id", "bucket"), "doc_id")
       .withColumn("predicted", when(col("score_micro") > DecisionMicro, "pos").otherwise("neg"))
       .groupBy("bucket", "predicted")
       .agg(count(lit(1)).as("n_docs"),
@@ -392,16 +374,6 @@ object QualityClassifier {
   def classifierAuc(spark: SparkSession, dir: String): DataFrame = {
     val (docTerm, buckets) = pieces(spark, dir)
     val (ratios, scal) = fit(spark, dir, docTerm, buckets)
-    aucFrom(scoreByJoin(docTerm, ratios, scal), buckets)
-  }
-
-  /** Un-checkpointed twin for plan audits (the [[classifierConfusionPlan]]
-    * pattern): the gated form's memoized stages collapse to RDD scans in
-    * explain output. */
-  private[graft] def classifierAucPlan(spark: SparkSession, dir: String): DataFrame = {
-    val docTerm = TextAnalysis.docTermTf(spark, dir)
-    val buckets = TextAnalysis.unigramSurprisalFrom(docTerm)
-    val (ratios, scal) = fitFrom(classCountsPlan(docTerm, buckets))
     aucFrom(scoreByJoin(docTerm, ratios, scal), buckets)
   }
 

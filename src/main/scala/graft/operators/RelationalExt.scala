@@ -927,16 +927,7 @@ object RelationalExt {
     * pair join is bounded by basket size² (baskets are human-scale), and
     * every downstream join is brand-keyed (≤ |brands|² rows). */
   def marketBasket(spark: SparkSession, dir: String, minCount: Int = 10,
-      k: Int = 20): DataFrame =
-    marketBasketImpl(spark, dir, minCount, k, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full basket lineage
-    * the one-time materialization runs. */
-  private[graft] def marketBasketPlan(spark: SparkSession, dir: String): DataFrame =
-    marketBasketImpl(spark, dir, 10, 20, materialize = false)
-
-  private def marketBasketImpl(spark: SparkSession, dir: String, minCount: Int,
-      k: Int, materialize: Boolean): DataFrame = {
+      k: Int = 20): DataFrame = {
     val basket0 = table(spark, dir, "lineitem")
       .join(broadcast(table(spark, dir, "part").select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))
@@ -948,7 +939,7 @@ object RelationalExt {
     // distinct ran four times (r16; plan: 4 lineitem scans → 1). This is
     // also the 100 TB shape: materialize the distinct basket once, answer
     // every statistic from it.
-    val basket = if (materialize) basket0.localCheckpoint(false) else basket0
+    val basket = StageMemo.shared(basket0)
     // n_orders folds in-plan (no eager count() at DataFrame-construction
     // time — the semdedup lesson); lift products run in DECIMAL(38,0),
     // c_ab·n·10⁶ wraps int64 past ~10⁹ baskets

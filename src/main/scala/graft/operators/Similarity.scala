@@ -1691,22 +1691,22 @@ object Similarity {
   }
 
   def semDedup(spark: SparkSession, dir: String, nCentroids: Int = -1,
-      maxId: Long = 1000, tau: Double = 0.9, doCheckpoint: Boolean = true): DataFrame = {
+      maxId: Long = 1000, tau: Double = 0.9): DataFrame = {
     // -1 = derive k from the corpus size via the cell-count policy (the
     // fixture corpus is base ∪ perturbed copies, hence 2× the base count;
-    // one cheap metadata-adjacent count job, amortized over the whole query)
+    // one cheap metadata-adjacent count job, amortized over the whole query;
+    // a plan audit runs it too, then collects the query anyway)
     val k =
       if (nCentroids > 0) nCentroids
       else math.min(maxId - 100, // seed pool: fixture vectors with id ∈ [100, maxId)
         semDedupK(2L * table(spark, dir, "embeddings").filter(col("vec_id") < maxId).count())).toInt
     // assignment + norm computed ONCE, reused on both sides of the pair
-    // join. doCheckpoint=false is the plan-audit path: even a LAZY
+    // join. Under a plan audit the frame stays un-checkpointed: even a LAZY
     // localCheckpoint materializes the upstream AQE query stages (= Spark
-    // jobs) at DataFrame-CONSTRUCTION time, so plan-only consumers skip it
-    // and lean on exchange reuse instead — the assignment's window shuffle
-    // is an identical subtree on both join sides (VERDICT r8 #2)
-    val cellsRaw = semDedupCells(spark, dir, k, maxId)
-    val cells = if (doCheckpoint) cellsRaw.localCheckpoint(false) else cellsRaw
+    // jobs) at DataFrame-CONSTRUCTION time, so the audit leans on exchange
+    // reuse instead — the assignment's window shuffle is an identical
+    // subtree on both join sides (VERDICT r8 #2)
+    val cells = StageMemo.shared(semDedupCells(spark, dir, k, maxId))
     val a = cells.select(col("cell"), col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na"))
     val b = cells.select(col("cell"), col("vec_id").as("id_b"), col("embedding").as("vb"), col("nrm").as("nb"))
     val dropped = a.join(b, Seq("cell"))
@@ -1720,19 +1720,6 @@ object Similarity {
         when(col("is_dup").isNull, 1L).otherwise(0L).as("keep"))
       .orderBy("vec_id")
   }
-
-  /** Plan-audit twin ([[TextAnalysis.unigramSurprisalPlan]] pattern): the
-    * gated query's auto-k runs a corpus count() — an eager Spark action at
-    * DataFrame-CONSTRUCTION time, fine for the gated run (one cheap job
-    * amortized over the query) but wrong for plan-only consumers, which
-    * would execute a job just to build a plan (ADVICE r7). This twin pins
-    * k explicitly AND skips the cells checkpoint (a lazy localCheckpoint
-    * still materializes upstream AQE stages at construction); the plan
-    * SHAPE is identical — k only sizes the broadcast centroid table, and
-    * exchange reuse stands in for the checkpoint's compute-once guarantee.
-    * Zero Spark jobs at construction, asserted in PlanQualitySpec. */
-  def semDedupPlan(spark: SparkSession, dir: String, nCentroids: Int = 8): DataFrame =
-    semDedup(spark, dir, nCentroids = nCentroids, doCheckpoint = false)
 
   def semDedupOracle(nCentroids: Int = -1, maxId: Long = 1000,
       tau: Double = 0.9, targetCellSize: Long = 125L): String = {
@@ -2204,61 +2191,53 @@ object Similarity {
     // pair-product aggregation — and BOTH [[dimCorrMatrix]] and
     // [[topPrincipalComponent]] need them. One build per (session, dir);
     // the bench releases the stages after their last consumer.
-    val (margPlan, pairsPlan) = covarianceSumsPlan(spark, dir)
-    (StageMemo(spark, dir, "cov_marg")(margPlan),
-      StageMemo(spark, dir, "cov_pairs")(pairsPlan))
-  }
-
-  /** Un-memoized twin for plan audits (PlansDump). */
-  private[graft] def covarianceSumsPlan(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val e = table(spark, dir, "embeddings")
-      .select(col("vec_id"),
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))")
-          .as("m"))
-    // marginals: one explode, ≤ d groups
-    val marg = e.select(posexplode(col("m")).as(Seq("dim", "v")))
-      .groupBy(col("dim").cast("int").as("dim"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("v"))).as("s"),
-        sum(dec(col("v")) * dec(col("v"))).as("q"))
+    val e = quantizedEmbeddings(spark, dir)
+    val marg = marginalSums(e)
     // dimension is data, not schema: one 1-row lookup decides the
     // accumulation shape (the semdedup auto-k eager-action precedent)
     val d = e.select(size(col("m"))).limit(1).collect()
       .headOption.map(_.getInt(0)).getOrElse(0)
-    // -Dgraft.covariance.explode=true forces the explode form (the
-    // equality spec needs it now that the fixture's d=64 sits above the
-    // accumulator threshold); -Dgraft.covariance.accumulate=true forces
-    // the accumulator below the threshold
-    val useAccum = (d > AccumDimThreshold &&
-        !sys.props.get("graft.covariance.explode").contains("true")) ||
-      sys.props.get("graft.covariance.accumulate").contains("true")
-    val pairs =
-      if (useAccum) pairSumsAccum(e, d)
-      else e.select(explode(expr(
-        """flatten(transform(sequence(0, size(m) - 2), i ->
-          |  transform(sequence(i + 1, size(m) - 1), j ->
-          |    struct(CAST(i AS INT) AS dim_i, CAST(j AS INT) AS dim_j,
-          |           m[i] * m[j] AS xy))))""".stripMargin)).as("p"))
-        .select("p.*")
-        .groupBy("dim_i", "dim_j")
-        .agg(count(lit(1)).as("n"), sum(dec(col("xy"))).as("sxy"))
-    (marg, pairs)
+    val pairs = if (d > AccumDimThreshold) pairSumsAccum(e, d) else pairSumsExplode(e)
+    (StageMemo(spark, dir, "cov_marg")(marg),
+      StageMemo(spark, dir, "cov_pairs")(pairs))
   }
 
-  /** Declarative [[dimCorrMatrix]] twin for PlansDump (the memoized form's
-    * own plan is two checkpoint scans + the join). */
-  private[graft] def dimCorrMatrixPlan(spark: SparkSession, dir: String): DataFrame = {
-    val (marg, pairs) = covarianceSumsPlan(spark, dir)
-    dimCorrFrom(marg, pairs)
+  /** (vec_id, m): each embedding quantized to exact micro-unit BIGINTs. */
+  private[graft] def quantizedEmbeddings(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "embeddings")
+      .select(col("vec_id"),
+        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))")
+          .as("m"))
+
+  /** Per-dimension (dim, n, Σx, Σx²): one explode, ≤ d groups. */
+  private[graft] def marginalSums(e: DataFrame): DataFrame = {
+    val dec = (c: Column) => c.cast("decimal(38,0)")
+    e.select(posexplode(col("m")).as(Seq("dim", "v")))
+      .groupBy(col("dim").cast("int").as("dim"))
+      .agg(count(lit(1)).as("n"), sum(dec(col("v"))).as("s"),
+        sum(dec(col("v")) * dec(col("v"))).as("q"))
   }
 
-  /** The d > [[AccumDimThreshold]] pair-sum form (also forced via
-    * `-Dgraft.covariance.accumulate=true` for the equality spec): ONE
+  /** The d ≤ [[AccumDimThreshold]] pair-sum form: d(d−1)/2 structs
+    * exploded per row, partially aggregated into the final (i,j) groups. */
+  private[graft] def pairSumsExplode(e: DataFrame): DataFrame = {
+    val dec = (c: Column) => c.cast("decimal(38,0)")
+    e.select(explode(expr(
+      """flatten(transform(sequence(0, size(m) - 2), i ->
+        |  transform(sequence(i + 1, size(m) - 1), j ->
+        |    struct(CAST(i AS INT) AS dim_i, CAST(j AS INT) AS dim_j,
+        |           m[i] * m[j] AS xy))))""".stripMargin)).as("p"))
+      .select("p.*")
+      .groupBy("dim_i", "dim_j")
+      .agg(count(lit(1)).as("n"), sum(dec(col("xy"))).as("sxy"))
+  }
+
+  /** The d > [[AccumDimThreshold]] pair-sum form: ONE
     * packed 128-bit upper-triangle buffer per partition
     * ([[graft.functions.OuterProductAgg]]) instead of d(d−1)/2 exploded
     * structs per row — same exact DECIMAL(38,0) sums, same output frame,
     * different accumulation shape. */
-  private def pairSumsAccum(e: DataFrame, d: Int): DataFrame =
+  private[graft] def pairSumsAccum(e: DataFrame, d: Int): DataFrame =
     e.agg(count(lit(1)).as("n"),
         graft.functions.OuterProductAgg.outer_product_agg(col("m"), d).as("op"))
       .select(col("n"), explode(col("op")).as("p"))
@@ -2270,7 +2249,7 @@ object Similarity {
     dimCorrFrom(marg, pairs)
   }
 
-  private def dimCorrFrom(marg: DataFrame, pairs: DataFrame): DataFrame = {
+  private[graft] def dimCorrFrom(marg: DataFrame, pairs: DataFrame): DataFrame = {
     val mi = marg.select(col("dim").as("dim_i"), col("s").cast("double").as("si"),
       col("q").cast("double").as("qi"))
     val mj = marg.select(col("dim").as("dim_j"), col("s").cast("double").as("sj"),

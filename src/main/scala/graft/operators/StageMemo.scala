@@ -41,6 +41,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * version is an immutable path (new snapshot ⇒ new dir ⇒ new key). Point
   * each corpus VERSION at its own directory; never rewrite one in place.
   * ([[clear]] resets the memo when a test must re-read a mutated dir.)
+  *
+  * ==Plan audits==
+  * A frame read from the memo (or from an in-query [[shared]] frame) shows
+  * up in explain output as a checkpoint scan, which hides the lineage a
+  * plan audit exists to read. Inside [[audit]] every stage and shared frame
+  * is its un-materialized build instead, so the audited plan of a query is
+  * the full pipeline its materializations run. The scope belongs to the
+  * calling thread (and threads started inside it), records nothing (no
+  * memo entry, no reader, no rebuild) and is entered only by the plan
+  * dumps (`PlansDump`, `PlanFiles`) and specs; outside it every call
+  * behaves exactly as described above.
   */
 private[graft] object StageMemo {
 
@@ -65,6 +76,10 @@ private[graft] object StageMemo {
   }
 
   def apply(spark: SparkSession, dir: String, stage: String)(
+      build: => DataFrame): DataFrame =
+    if (auditing.value) build else memoized(spark, dir, stage, build)
+
+  private def memoized(spark: SparkSession, dir: String, stage: String,
       build: => DataFrame): DataFrame = {
     val ck = ctxKey(spark)
     // only ONE SparkContext can be active per JVM: entries from any other
@@ -98,6 +113,28 @@ private[graft] object StageMemo {
     stageCache.getOrElseUpdate(key,
       new Memo(() => build.localCheckpoint(true))).df
   }
+
+  // ------------------------------------------------ plan audits
+
+  private val auditing = new scala.util.DynamicVariable(false)
+
+  /** Runs `body` in plan-audit mode (see the class doc): [[apply]] returns
+    * the stage build un-materialized and [[shared]] is the identity. The
+    * mode is reset when `body` returns or throws. */
+  def audit[T](body: => T): T = auditing.withValue(true)(body)
+
+  /** True inside [[audit]] on this thread. */
+  def isAuditing: Boolean = auditing.value
+
+  /** An in-query shared frame — one several plan branches read, which
+    * Spark would otherwise recompute per branch (no cross-branch CSE):
+    * materialized once by a lazy local checkpoint, or left as its full
+    * lineage inside [[audit]]. */
+  def shared(df: DataFrame): DataFrame =
+    if (auditing.value) df else df.localCheckpoint(false)
+
+  /** Resident stage names (spec hook). */
+  private[operators] def residentStages: Set[String] = stageCache.keySet.map(_._3).toSet
 
   /** Test/bench hook: drop every memoized stage WITHOUT unpersisting
     * (blocks are then freed by the ContextCleaner once the returned

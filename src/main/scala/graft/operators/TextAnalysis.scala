@@ -1518,16 +1518,6 @@ object TextAnalysis {
   def dupSpans(spark: SparkSession, dir: String): DataFrame =
     dupSpansFrom(sharedSpanTable(spark, dir), sharedDupGrams(spark, dir))
 
-  /** Un-memoized twin of [[dupSpans]] for plan audits: the gated form
-    * reads materialized (checkpoint-scan) stages, which would make the
-    * shuffle/aggregate assertions vacuous. */
-  private[graft] def dupSpansPlan(spark: SparkSession, dir: String): DataFrame = {
-    val spans = spanTable(spark, dir)
-    dupSpansFrom(spans,
-      spans.groupBy("g").agg(count(lit(1)).as("n_docs"))
-        .filter(col("n_docs") >= 2).select("g"))
-  }
-
   val dupSpansOracle: String =
     s"""WITH corpus AS (
       |  ${Dedup.corpusSql.linesIterator.mkString("\n|  ")}
@@ -1572,21 +1562,18 @@ object TextAnalysis {
     * round 15 wires the keep/cut verdict into [[trainingManifest]] as keep
     * gate #5, so the gated `text_paragraph_dedup` row and the manifest
     * family read ONE build instead of re-segmenting the corpus each
-    * (VERDICT r14 #4). Tiny: five ints per doc. */
+    * (VERDICT r14 #4). Tiny: five ints per doc.
+    *
+    * Single segmentation (VERDICT r14 #4: the r14 shape fed one `paras`
+    * projection into BOTH the hash-frequency aggregate and the join-back,
+    * so the transform/slice/md5 projection over every document ran in two
+    * jobs). Here the corpus segments ONCE: per-(phash, doc_id) instance
+    * counts first (the only aggregate that touches exploded rows), then
+    * the cross-doc screen as a count over the phash partition of that
+    * GROUPED frame — grouped rows are bounded by docs-containing-the-hash,
+    * so the window is per-key work, never a per-language/global sort. */
   private[operators] def sharedParagraphVerdicts(spark: SparkSession,
-      dir: String): DataFrame =
-    StageMemo(spark, dir, "para_dedup")(paragraphDedupPlan(spark, dir))
-
-  /** Un-memoized twin for plan audits, and the single-segmentation form
-    * (VERDICT r14 #4: the r14 shape fed one `paras` projection into BOTH
-    * the hash-frequency aggregate and the join-back, so the transform/
-    * slice/md5 projection over every document ran in two jobs). Here the
-    * corpus segments ONCE: per-(phash, doc_id) instance counts first (the
-    * only aggregate that touches exploded rows), then the cross-doc
-    * screen as a count over the phash partition of that GROUPED frame —
-    * grouped rows are bounded by docs-containing-the-hash, so the window
-    * is per-key work, never a per-language/global sort. */
-  private[graft] def paragraphDedupPlan(spark: SparkSession, dir: String): DataFrame = {
+      dir: String): DataFrame = StageMemo(spark, dir, "para_dedup") {
     import org.apache.spark.sql.expressions.Window
     val paras = table(spark, dir, "documents")
       .filter(size(words) >= ParaWords)
@@ -2426,11 +2413,6 @@ object TextAnalysis {
     // every LM fit reads, and its consumers must not re-tokenize per query
     sharedUnigramBuckets(spark, dir).orderBy("doc_id")
 
-  /** Un-checkpointed twin for plan audits ([[dupSpansPlan]] pattern):
-    * the gated form's checkpoint collapses the upstream to an RDD scan. */
-  private[graft] def unigramSurprisalPlan(spark: SparkSession, dir: String): DataFrame =
-    unigramSurprisalFrom(docTermTf(spark, dir))
-
   private[operators] def docTermTf(spark: SparkSession, dir: String): DataFrame =
     // spread (r16): the single-split fixture scan otherwise runs the
     // tokenize AND the per-row counting on one core.
@@ -2556,7 +2538,7 @@ object TextAnalysis {
     * unigram form. */
   def bigramSurprisal(spark: SparkSession, dir: String): DataFrame =
     StageMemo(spark, dir, "lm_bi_buckets")(
-      bigramSurprisalFrom(docPairTf(spark, dir).localCheckpoint(false)))
+      bigramSurprisalFrom(StageMemo.shared(docPairTf(spark, dir))))
 
   /** The unigram tercile frame MATERIALIZED once per (session, dir) —
     * shared by [[lmOrderAgreement]] and the classifier family
@@ -2566,10 +2548,6 @@ object TextAnalysis {
     val docTerm = StageMemo(spark, dir, "nb_docterm")(docTermTf(spark, dir))
     StageMemo(spark, dir, "nb_buckets")(unigramSurprisalFrom(docTerm))
   }
-
-  /** Un-checkpointed twin for plan audits ([[unigramSurprisalPlan]]). */
-  private[graft] def bigramSurprisalPlan(spark: SparkSession, dir: String): DataFrame =
-    bigramSurprisalFrom(docPairTf(spark, dir))
 
   private[operators] def docPairTf(spark: SparkSession, dir: String): DataFrame =
     // row-local pair tf (r17, guide §2.3/§2.4 — the [[docTermTf]] move at
@@ -2771,11 +2749,11 @@ object TextAnalysis {
   def trigramDeployed(spark: SparkSession, dir: String): DataFrame =
     lmDeployedFrom(trigramSurprisal(spark, dir))
 
-  /** The deployed CLASSIFY lineage alone, for plan audits: built from the
-    * materialized bucket artifact, so its explain must show scan +
-    * broadcast join only — any Window/Sort-per-language here would mean
-    * the production path regressed to the calibration plan. */
-  private[graft] def ccnetDeployedClassifyPlan(spark: SparkSession, dir: String): DataFrame = {
+  /** The deployed CLASSIFY lineage alone: built from the materialized
+    * bucket artifact, so its explain must show scan + broadcast join only
+    * — any Window/Sort-per-language here would mean the production path
+    * regressed to the calibration plan. */
+  private[graft] def ccnetDeployedClassify(spark: SparkSession, dir: String): DataFrame = {
     val buckets = sharedUnigramBuckets(spark, dir)
     classifyByThreshold(buckets, lmThresholds(buckets))
   }
@@ -2884,11 +2862,6 @@ object TextAnalysis {
       tercileBucketsOf(trigramDocScores(trigramScoredMemo(spark, dir))))
       .orderBy("doc_id")
 
-  /** Un-checkpointed twin for plan audits ([[bigramSurprisalPlan]]). */
-  private[graft] def trigramSurprisalPlan(spark: SparkSession, dir: String): DataFrame =
-    tercileBucketsOf(trigramDocScores(trigramScoredOcc(docTriTf(spark, dir))))
-      .orderBy("doc_id")
-
   private def docTriTf(spark: SparkSession, dir: String): DataFrame =
     // row-local trigram tf (r17, guide §2.3/§2.4 — the [[docTermTf]] move
     // at order 3): per-doc distinct (w1, w2, w3, tf) out of one row via
@@ -2912,15 +2885,6 @@ object TextAnalysis {
     val occ = StageMemo(spark, dir, "lm_tri_occ")(docTriTf(spark, dir))
     StageMemo(spark, dir, "lm_tri_scored")(trigramScoredOcc(occ))
   }
-
-  // ProbeR16 accessors (dev-only): expose the lm_tri sub-builds for the
-  // stage-charge decomposition probe without widening real visibility.
-  private[operators] def docTriTfProbe(spark: SparkSession, dir: String): DataFrame =
-    docTriTf(spark, dir)
-  private[operators] def lmTriOccStage(spark: SparkSession, dir: String): DataFrame =
-    StageMemo(spark, dir, "lm_tri_occ")(docTriTf(spark, dir))
-  private[operators] def lmTriScoredStage(spark: SparkSession, dir: String): DataFrame =
-    trigramScoredMemo(spark, dir)
 
   private[operators] def trigramScoredOcc(triOcc: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -3130,15 +3094,7 @@ object TextAnalysis {
     * for a totals broadcast (measured: 5.2 s → the 2-pass form below at
     * sf0.1; the unpartitioned window is safe HERE precisely because its
     * input is ≤ charset² rows, never corpus-sized). */
-  def targetAffinity(spark: SparkSession, dir: String): DataFrame =
-    targetAffinityImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit (full tf lineage). */
-  private[graft] def targetAffinityPlan(spark: SparkSession, dir: String): DataFrame =
-    targetAffinityImpl(spark, dir, materialize = false)
-
-  private def targetAffinityImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def targetAffinity(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // spread (r16): single-split scan ⇒ one-core explode otherwise; lazy
     // checkpoint because the fit branch (counts) AND the scoring branch
@@ -3158,7 +3114,7 @@ object TextAnalysis {
         explode(graft.functions.VectorExpressions.gram_tfs(col("cs"), 2)).as("g"))
       .select(col("doc_id"), col("source"),
         concat(col("g.w1"), col("g.w2")).as("bigram"), col("g.tf").as("tf"))
-    val docTf = if (materialize) docTf0.localCheckpoint(false) else docTf0
+    val docTf = StageMemo.shared(docTf0)
     val counts = docTf
       .groupBy("bigram")
       .agg(
@@ -4522,15 +4478,7 @@ object TextAnalysis {
     * vocabulary score exactly 10⁶; near-identical mixes score ~0 — the
     * crawl-dialect / syndication fingerprint next to the near-dup
     * source-overlap matrix. */
-  def sourceTvDistance(spark: SparkSession, dir: String): DataFrame =
-    sourceTvDistanceImpl(spark, dir, materialize = true)
-
-  /** Un-materialized twin for plan audits. */
-  private[graft] def sourceTvDistancePlan(spark: SparkSession, dir: String): DataFrame =
-    sourceTvDistanceImpl(spark, dir, materialize = false)
-
-  private def sourceTvDistanceImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def sourceTvDistance(spark: SparkSession, dir: String): DataFrame = {
     val counts0 = table(spark, dir, "documents")
       .select(col("source"), explode(words).as("word"))
       .filter(col("word") =!= "")
@@ -4539,7 +4487,7 @@ object TextAnalysis {
     // self-join sides — without materialization the corpus tokenize +
     // explode + aggregate ran once per branch (r17; plan: 3 document
     // scans → 1)
-    val counts = if (materialize) counts0.localCheckpoint(false) else counts0
+    val counts = StageMemo.shared(counts0)
     val totals = counts.groupBy(col("source")).agg(sum(col("c")).as("n"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val a = counts.select(col("source").as("source_a"), col("word"), col("c").as("ca"))

@@ -809,22 +809,26 @@ object ProfileQueries {
     * idle while lineitem's critical path runs. Submitting each branch's
     * own (tiny: rows-per-column) localCheckpoint from a bounded pool lets
     * the next table's scan back-fill the current one's straggler tail —
-    * measured 3.59 → 2.25 s steady on the catalog build (ProbeR17
-    * `catalog`, sf0.1). Deterministic: branch order is fixed, every
+    * measured 3.59 → 2.25 s steady on the catalog build (sf0.1, see
+    * `OPTIMIZATION_r17.md`). Deterministic: branch order is fixed, every
     * branch materializes exactly the rows its plan defines, and all
     * consumers re-sort. Pool of 3: enough to fill the tail, not enough to
-    * thrash (guide: "2-3 jobs in flight is plenty"). */
-  private def pooledUnion(frames: Seq[DataFrame], poolSize: Int = 3): DataFrame = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = frames.map(f => scala.concurrent.Future(f.localCheckpoint(true)))
-      futs.map(f =>
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        .reduce(_ union _)
-    } finally pool.shutdown()
-  }
+    * thrash (guide: "2-3 jobs in flight is plenty"). Under a plan audit
+    * (checked here, on the caller thread, before any fork) the branches
+    * are unioned as they are. */
+  private def pooledUnion(frames: Seq[DataFrame], poolSize: Int = 3): DataFrame =
+    if (graft.operators.StageMemo.isAuditing) frames.reduce(_ union _)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+      try {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        val futs = frames.map(f => scala.concurrent.Future(f.localCheckpoint(true)))
+        futs.map(f =>
+            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+          .reduce(_ union _)
+      } finally pool.shutdown()
+    }
 
   private def perTableCatalogFrames(spark: SparkSession, dir: String): Seq[DataFrame] =
     Fixtures.allTables.map { t =>
@@ -838,10 +842,6 @@ object ProfileQueries {
           col(s"ndv_$c").as("ndv"))): _*)).as("p"))
         .select("p.*")
     }
-
-  /** Un-memoized, un-pooled twin for plan audits (full lineage). */
-  private[graft] def catalogProfilePlan(spark: SparkSession, dir: String): DataFrame =
-    perTableCatalogFrames(spark, dir).reduce(_ union _)
 
   val catalogProfileOracle: String = {
     val selects = Fixtures.allTables.flatMap { t =>
@@ -1261,23 +1261,7 @@ object ProfileQueries {
     * (≈ domain/10⁴ rows) see a single-partition window. A naive
     * `Window.orderBy(cents)` collapses the whole distinct-value frame to
     * one task (measured 4-6 s at sf0.1; this form ~1 s). */
-  def giniOf(df: DataFrame, column: String): DataFrame =
-    giniOfImpl(df, column, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full grouped-frame
-    * lineage the one-time materialization runs. */
-  private[graft] def giniOfPlan(df: DataFrame, column: String): DataFrame =
-    giniOfImpl(df, column, materialize = false)
-
-  private[graft] def giniProfilePlan(spark: SparkSession, dir: String): DataFrame =
-    giniOfPlan(Fixtures.table(spark, dir, "lineitem"), "l_extendedprice")
-
-  private[graft] def weightedPercentilesPlan(spark: SparkSession, dir: String): DataFrame =
-    weightedPercentilesOfPlan(Fixtures.table(spark, dir, "lineitem"),
-      "l_extendedprice", "l_quantity")
-
-  private def giniOfImpl(df: DataFrame, column: String,
-      materialize: Boolean): DataFrame = {
+  def giniOf(df: DataFrame, column: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // keys, counts, and prefix sums stay BIGINT through the shuffle and
     // windows (8 B keys, codegen'd hash agg + long-sum windows — decimal
@@ -1294,7 +1278,7 @@ object ProfileQueries {
     // materialization the scan + group-by ran twice (r16; plan: 2 scans
     // → 1). Value-domain-bounded rows (distinct cents), so the lazy
     // localCheckpoint is tiny at any corpus size.
-    val grp = if (materialize) grp0.localCheckpoint(false) else grp0
+    val grp = graft.operators.StageMemo.shared(grp0)
     val wLocal = Window.partitionBy("bucket").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wBucket = Window.orderBy("bucket")
@@ -1637,17 +1621,7 @@ object ProfileQueries {
     * on synthetic weight distributions: unit weights reduce to the plain
     * lower percentile; a dominant weight owns every quantile). */
   def weightedPercentilesOf(df: DataFrame, valueCol: String,
-      weightCol: String): DataFrame =
-    weightedPercentilesImpl(df, valueCol, weightCol, materialize = true)
-
-  /** Un-materialized twin for the PLANS.md audit: the full grouped-frame
-    * lineage the one-time materialization runs. */
-  private[graft] def weightedPercentilesOfPlan(df: DataFrame, valueCol: String,
-      weightCol: String): DataFrame =
-    weightedPercentilesImpl(df, valueCol, weightCol, materialize = false)
-
-  private def weightedPercentilesImpl(df: DataFrame, valueCol: String,
-      weightCol: String, materialize: Boolean): DataFrame = {
+      weightCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val grp0 = df
       .filter(col(valueCol).isNotNull && col(weightCol).isNotNull)
@@ -1658,7 +1632,7 @@ object ProfileQueries {
     // cumulative join, and the total-weight aggregate) and Spark has no
     // cross-branch CSE — without materialization the scan + group-by ran
     // three times (r16; plan: 3 scans → 1). Distinct-cents rows only.
-    val grp = if (materialize) grp0.localCheckpoint(false) else grp0
+    val grp = graft.operators.StageMemo.shared(grp0)
     val wLocal = Window.partitionBy("bucket").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, 0)
     val wBucket = Window.orderBy("bucket")
@@ -1861,10 +1835,6 @@ object ProfileQueries {
         col("min_len").cast("bigint").as("min_len"),
         col("max_len").cast("bigint").as("max_len"),
         col("min_val"), col("max_val"))
-
-  /** Un-memoized, un-pooled twin for plan audits (full lineage). */
-  private[graft] def catalogStringProfilePlan(spark: SparkSession, dir: String): DataFrame =
-    perColumnStringFrames(spark, dir).reduce(_.union(_))
 
   val catalogStringProfileOracle: String =
     CatalogStringCols.flatMap { case (t, cols) => cols.map { c =>
@@ -2296,20 +2266,6 @@ object ProfileQueries {
       .select(col("tbl"), col("col_name").as("column_name"),
         col("n_rows"), col("n_nulls"), col("ndv"))
     val str = sharedCatalogStringProfile(spark, dir)
-      .select(col("table_name").as("tbl"), col("column_name"),
-        col("n_rows"), col("n_nulls"), col("ndv"))
-    num.unionAll(str)
-      .withColumn("is_pk", col("n_nulls") === 0 && col("ndv") === col("n_rows"))
-      .orderBy("tbl", "column_name")
-  }
-
-  /** Un-memoized twin for plan audits (full derivation incl. both
-    * whole-catalog scans that the gated form reads from the memo). */
-  private[graft] def pkDiscoveryPlan(spark: SparkSession, dir: String): DataFrame = {
-    val num = catalogProfilePlan(spark, dir)
-      .select(col("tbl"), col("col_name").as("column_name"),
-        col("n_rows"), col("n_nulls"), col("ndv"))
-    val str = catalogStringProfilePlan(spark, dir)
       .select(col("table_name").as("tbl"), col("column_name"),
         col("n_rows"), col("n_nulls"), col("ndv"))
     num.unionAll(str)

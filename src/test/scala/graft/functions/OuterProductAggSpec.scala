@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
+import graft.operators.{Similarity, StageMemo}
 
 /** Gates on [[OuterProductAgg]] — the d≳256 covariance accumulation form:
   * 128-bit cell arithmetic under forced carries, merge across real
@@ -53,19 +54,21 @@ class OuterProductAggSpec extends AnyFunSuite {
 
   test("dimCorrMatrix is bit-identical under the accumulator form") {
     val dir = SparkSuite.Sf0001
-    // the un-memoized plan twin: the gated form memoizes covariance sums
-    // (r16), which would hand the second run the FIRST run's frames and
-    // make this comparison vacuous. Both forms are FORCED explicitly —
-    // the fixture's d=64 sits above the accumulator threshold since r16,
-    // so the un-forced default would compare accum against itself.
-    System.setProperty("graft.covariance.explode", "true")
+    // both pair-sum forms run on the same quantized input: the fixture's
+    // d=64 sits above the accumulator threshold since r16, so the gated
+    // query alone would compare accum against itself
+    val e = Similarity.quantizedEmbeddings(spark, dir)
+    val d = e.select(size(col("m"))).head().getInt(0)
+    val explodePairs = Similarity.pairSumsExplode(e)
+    val sorted = (df: org.apache.spark.sql.DataFrame) =>
+      df.select("dim_i", "dim_j", "n", "sxy").orderBy("dim_i", "dim_j").collect().toSeq
+    assert(sorted(Similarity.pairSumsAccum(e, d)) == sorted(explodePairs),
+      "accumulator pair sums diverged from the explode pair sums")
     val explodeForm =
-      try graft.operators.Similarity.dimCorrMatrixPlan(spark, dir).collect().toSeq
-      finally System.clearProperty("graft.covariance.explode")
-    System.setProperty("graft.covariance.accumulate", "true")
-    try {
-      val accum = graft.operators.Similarity.dimCorrMatrixPlan(spark, dir).collect().toSeq
-      assert(accum == explodeForm, "accumulator form diverged from the explode form")
-    } finally System.clearProperty("graft.covariance.accumulate")
+      Similarity.dimCorrFrom(Similarity.marginalSums(e), explodePairs).collect().toSeq
+    // audited: the gated form memoizes covariance sums (r16), which would
+    // hand this run an earlier run's frames
+    val accum = StageMemo.audit(Similarity.dimCorrMatrix(spark, dir)).collect().toSeq
+    assert(accum == explodeForm, "accumulator form diverged from the explode form")
   }
 }

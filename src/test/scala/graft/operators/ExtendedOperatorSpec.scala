@@ -105,7 +105,8 @@ class ExtendedOperatorSpec extends AnyFunSuite {
 
   test("materialized candidate-pair stage equals the declarative pipeline plan") {
     val staged = Dedup.minhashCandidatePairs(spark, dir).collect().map(_.toSeq).toSeq
-    val declarative = Dedup.minhashCandidatePairsPlan(spark, dir).collect().map(_.toSeq).toSeq
+    val declarative = StageMemo.audit(Dedup.minhashCandidatePairs(spark, dir))
+      .collect().map(_.toSeq).toSeq
     assert(staged == declarative)
   }
 }

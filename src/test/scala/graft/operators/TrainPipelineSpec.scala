@@ -364,7 +364,7 @@ class TrainPipelineSpec extends AnyFunSuite {
   }
 
   test("lm deployed classify path is window-free (scan + broadcast boundaries only)") {
-    val plan = TextAnalysis.ccnetDeployedClassifyPlan(spark, dir)
+    val plan = TextAnalysis.ccnetDeployedClassify(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"),
       s"deployed classify path regressed to the calibration rank window:\n$plan")

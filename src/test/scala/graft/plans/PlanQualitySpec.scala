@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
-import graft.operators.Relational
+import graft.operators.{Relational, StageMemo}
 
 /** Physical-plan quality gates: the scan/shuffle/join properties the engine
   * RELIES on at 100 TB, asserted against the actual plans so a regression
@@ -319,13 +319,13 @@ class PlanQualitySpec extends AnyFunSuite {
       }
     }
     assert(!assignNodes.exists(_.nodeName.contains("CartesianProduct")))
-    // the full query via the plan twin (pins k, SKIPS the checkpoint so no
-    // job runs at construction — ADVICE r7/r8): pair join on `cell` must
-    // be a hash join, never a cross product. Without the checkpoint the
+    // the full query under the plan-audit scope (SKIPS the cells
+    // checkpoint — ADVICE r7/r8): pair join on `cell` must be a hash join,
+    // never a cross product. Without the checkpoint the
     // centroid-assignment BNLJ is now VISIBLE in this plan too — verify
     // every BNLJ builds a centroid-sized side, and nothing is a
     // CartesianProduct.
-    val df = graft.operators.Similarity.semDedupPlan(spark, SparkSuite.Sf0001)
+    val df = StageMemo.audit(graft.operators.Similarity.semDedup(spark, SparkSuite.Sf0001))
     df.collect()
     val fullNodes = nodes(df)
     val names = fullNodes.map(_.nodeName)
@@ -344,8 +344,10 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("semdedup plan twin: DataFrame construction + optimization runs zero Spark jobs") {
     // the gated query's auto-k runs one count() job at construction by
-    // design; plan-only consumers must use the twin, which pins k and so
-    // must never touch the cluster just to build a plan (ADVICE r7/r8)
+    // design; with k pinned, the audited query (no cells checkpoint) must
+    // never touch the cluster just to build a plan (ADVICE r7/r8)
+    def audited() = StageMemo.audit(
+      graft.operators.Similarity.semDedup(spark, SparkSuite.Sf0001, nCentroids = 8))
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new SparkListener {
@@ -354,10 +356,10 @@ class PlanQualitySpec extends AnyFunSuite {
     // warm construction first: the very first read of a parquet path pays
     // one schema-inference job, memoized in Fixtures.schemaCache — the
     // assertion targets the steady state every repeated consumer sees
-    graft.operators.Similarity.semDedupPlan(spark, SparkSuite.Sf0001).queryExecution.optimizedPlan
+    audited().queryExecution.optimizedPlan
     spark.sparkContext.addSparkListener(l)
     try {
-      val df = graft.operators.Similarity.semDedupPlan(spark, SparkSuite.Sf0001)
+      val df = audited()
       df.queryExecution.optimizedPlan // force analysis + optimization
       Thread.sleep(1000) // listener bus is async; let any job event land
       assert(jobs.get() == 0, s"building the semdedup plan ran ${jobs.get()} Spark jobs")
@@ -387,8 +389,8 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("dup spans: both group-bys are partial+final and the span key never exceeds a hash") {
-    // the un-memoized twin: the gated form reads checkpoint scans
-    val df = graft.operators.TextAnalysis.dupSpansPlan(spark, SparkSuite.Sf0001)
+    // audited: outside the scope the gated form reads checkpoint scans
+    val df = StageMemo.audit(graft.operators.TextAnalysis.dupSpans(spark, SparkSuite.Sf0001))
     df.collect()
     val names = nodes(df).map(_.nodeName)
     assert(names.count(_.contains("HashAggregate")) >= 4,
@@ -398,9 +400,9 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("ccnet buckets: every rank window is partitioned by language (no global rank)") {
     import org.apache.spark.sql.execution.window.WindowExec
-    // the un-checkpointed twin: the gated form's docTerm checkpoint
+    // audited: outside the scope the gated form's docTerm checkpoint
     // collapses the fit/score subtrees this gate exists to audit
-    val df = graft.operators.TextAnalysis.unigramSurprisalPlan(spark, SparkSuite.Sf0001)
+    val df = StageMemo.audit(graft.operators.TextAnalysis.unigramSurprisal(spark, SparkSuite.Sf0001))
     df.collect()
     val windows = nodes(df).collect { case w: WindowExec => w }
     assert(windows.nonEmpty)
@@ -411,7 +413,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("bigram buckets: rank and prefix windows stay partitioned (lang / lang,w1)") {
     import org.apache.spark.sql.execution.window.WindowExec
-    val df = graft.operators.TextAnalysis.bigramSurprisalPlan(spark, SparkSuite.Sf0001)
+    val df = StageMemo.audit(graft.operators.TextAnalysis.bigramSurprisal(spark, SparkSuite.Sf0001))
     df.collect()
     val windows = nodes(df).collect { case w: WindowExec => w }
     assert(windows.nonEmpty)
@@ -450,9 +452,9 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("dsir: scoring joins the 512-bucket ratio table broadcast; selection windows per source") {
     import org.apache.spark.sql.execution.window.WindowExec
-    // the un-checkpointed twin: the gated form's feature checkpoint
+    // audited: outside the scope the gated form's feature checkpoint
     // collapses the fit/score subtrees this gate exists to audit
-    val df = graft.operators.DataSelection.dsirImportancePlan(spark, SparkSuite.Sf0001)
+    val df = StageMemo.audit(graft.operators.DataSelection.dsirImportance(spark, SparkSuite.Sf0001))
     df.collect()
     val names = nodes(df).map(_.nodeName)
     assert(names.exists(_.contains("BroadcastHashJoin")),

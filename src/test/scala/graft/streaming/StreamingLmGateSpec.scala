@@ -28,7 +28,7 @@ class StreamingLmGateSpec extends AnyFunSuite {
       assert((n, s) == batch(id), s"doc $id: row-local ($n,$s) != batch ${batch(id)}")
     }
     // the stream's threshold bucket must match the batch deployed classify
-    val deployed = TextAnalysis.ccnetDeployedClassifyPlan(spark, dir)
+    val deployed = TextAnalysis.ccnetDeployedClassify(spark, dir)
       .collect().map(r => r.getLong(r.fieldIndex("doc_id")) ->
         r.getString(r.fieldIndex("bucket_thr"))).toMap
     rowLocal.foreach { case (id, (_, _, b)) =>
