@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
@@ -70,22 +69,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core on the box: the driver only sets SPARK_GRAFT_SF_DIR,
-    // and a hardcoded low default silently benches the engine at local[4]
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // inert on the current micros fixtures; kept for nanos parquet inputs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sorted-bucket scans report their ordering (see GraftSession)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Untimed warmup. Round 2 warmed only a hand-picked subset and the
     // first-alphabetically md5-group-by queries (dedup_exact_*) still paid
     // ~4 s of JVM/JIT on their first execution. Warm EVERY declared query
@@ -99,12 +83,8 @@ object Bench {
     // "exact 8-column NDV" was count() pruning the NDVs away entirely. The
     // noop DSv2 sink fully materializes every output row and column and
     // discards them — the honest "run the query" cost. (ADVICE r4/r5)
-    // SPARK_GRAFT_BENCH_ACTION=count restores the old action for
-    // apples-to-apples comparison against pre-round-6 artifacts.
-    val useCount = sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count")
     def run(df: org.apache.spark.sql.DataFrame): Unit =
-      if (useCount) { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       val warmSf = "/root/testdata/sf0.001"

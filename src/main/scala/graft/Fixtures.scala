@@ -8,20 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Fixtures {
 
-  /** Inferred-schema memo: `spark.read.parquet` runs a footer-inference
-    * Spark job on EVERY call, so each query construction was paying one
-    * tiny driver job per table touched (and plan-only consumers could
-    * never be job-free). Fixtures are immutable per round, so the schema
-    * is read once per (session, path) and replayed via `.schema(...)`,
-    * which skips inference entirely. Keyed on the session identity because
-    * session confs (e.g. nanosAsLong) change what a footer infers to. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
+  /** A fixture table read with its schema memoized per (session, path):
+    * `spark.read.parquet` runs a footer-inference Spark job on EVERY call,
+    * so each query construction would pay one tiny driver job per table
+    * touched (and plan-only consumers could never be job-free). Fixtures
+    * are immutable per round, so the schema is inferred once and replayed
+    * via `.schema(...)`, which skips inference entirely. Scoped to the
+    * session ([[GraftSession.scoped]]) because session confs (e.g.
+    * nanosAsLong) change what a footer infers to. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = System.identityHashCode(spark) + "|" + path
-    val schema = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    val schema = GraftSession.scoped(spark, s"schema|$path")(spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     // Under `spark.sql.legacy.parquet.nanosAsLong` a TIMESTAMP(NANOS)
     // `events.ts` arrives as LongType (nanos since epoch). Every event
@@ -58,14 +55,10 @@ object Fixtures {
     // is constant per (session, semantic plan): memoize it. Key is the
     // analyzed plan's semanticHash — a collision could only flip a
     // repartition decision (performance, never results).
-    val key = System.identityHashCode(df.sparkSession) + "|" +
-      df.queryExecution.analyzed.semanticHash()
-    val few = spreadCache.computeIfAbsent(key, _ => df.rdd.getNumPartitions < p)
+    val few = GraftSession.scoped(df.sparkSession,
+      s"spread|${df.queryExecution.analyzed.semanticHash()}")(df.rdd.getNumPartitions < p)
     if (few) df.repartition(p) else df
   }
-
-  private val spreadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   val allTables: Seq[String] = Seq(
     "customer", "documents", "embeddings", "events", "lineitem",

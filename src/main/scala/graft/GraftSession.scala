@@ -1,8 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.SparkSession
 
-/** One place for every session conf the engine depends on.
+/** One place for every session conf the engine depends on, and the one
+  * session builder every entry point uses: `Bench`, `TimeQuery`,
+  * `TenXCorpus`, `ScaleProbe`, `StreamStateProbe`, `Verify`,
+  * `VerifySubset`, `ProfileMain`, `PlansDump`, `PlanFiles`, `ExplainMain`
+  * and the test suites' `SparkSuite` call [[local]]; the benchmark driver
+  * calls [[configure]] on its own builder.
   *
   * - `nanosAsLong`: kept so TIMESTAMP(NANOS) parquet inputs read (as bigint
   *   nanos) instead of failing; the `events` fixture itself is
@@ -12,13 +19,23 @@ import org.apache.spark.sql.SparkSession
   *   r8) — operators never see the raw long.
   * - UTC session TZ + English month names: reference formats all temporal
   *   output with UTC getters (`/root/reference/src/listTables.tsx:158-167`).
-  * - 32 shuffle partitions: sized for local[32]; on a real cluster this is
-  *   overridden per-deploy (AQE coalesces the tail either way).
+  * - shuffle partitions = [[cpus]]: one per core of the local box; on a
+  *   real cluster this is overridden per-deploy (AQE coalesces the tail
+  *   either way).
+  *
+  * Session-scoped state (memoized schemas, split-count verdicts, listener
+  * registrations, cloned child sessions) lives in [[scoped]], never in a
+  * cache of its own.
   */
 object GraftSession {
 
+  /** Cores the engine sizes itself to: `SPARK_GRAFT_CPUS`, else every core
+    * the JVM sees (a hardcoded low default silently benches at local[4]). */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    .config("spark.sql.shuffle.partitions", cpus.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -29,11 +46,26 @@ object GraftSession {
     .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     .config("spark.ui.enabled", "false")
 
-  def local(threads: Int = 32): SparkSession = {
+  def local(threads: Int = cpus): SparkSession = {
     val spark = configure(
       SparkSession.builder().master(s"local[$threads]").appName("graft")
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  private val sessionState =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, AnyRef]]()
+
+  /** The value of `key` in `spark`'s own state, computed at most once per
+    * session. `SparkSession` keeps reference equality, so two live sessions
+    * (a `newSession()` clone included) never share an entry, and an entry
+    * dies with its session. The value must not hold a strong reference to
+    * `spark`: the weak key would then never clear. */
+  def scoped[V](spark: SparkSession, key: String)(compute: => V): V = {
+    val state = sessionState.synchronized {
+      sessionState.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, AnyRef]())
+    }
+    state.computeIfAbsent(key, _ => compute.asInstanceOf[AnyRef]).asInstanceOf[V]
   }
 }

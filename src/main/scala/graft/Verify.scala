@@ -6,7 +6,7 @@ package graft
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = VerifySupport.session()
+    val spark = GraftSession.local()
     VerifySupport.dumpQueries(spark, sfDir, outDir, SparkEntry.queries.keys)
     VerifySupport.writeOracleJson(outDir, SparkEntry.oracleSql.keys)
     spark.stop()

@@ -6,31 +6,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for [[Verify]] (the driver's full correctness dump) and
   * [[graft.cli.VerifySubset]] (the dev-loop subset form) — ONE copy of the
-  * session config, the dump-and-isolate loop, and the load-bearing JSON
-  * escaper, so the subset tool can never drift from the real verify path
-  * it claims to mirror.
+  * dump-and-isolate loop and the load-bearing JSON escaper, so the subset
+  * tool can never drift from the real verify path it claims to mirror.
+  * Both build their session with [[GraftSession.local]].
   */
 object VerifySupport {
-
-  /** The verify/bench session: local[N] from SPARK_GRAFT_CPUS (default all
-    * cores), matching shuffle partitions, UTC, AQE, nanos legacy read. */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // inert on the current micros fixtures; kept for nanos parquet inputs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sorted-bucket scans report their ordering (see GraftSession)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the

@@ -22,7 +22,7 @@ object PlanFiles {
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.01")
     require(Files.isDirectory(Paths.get(dir)), s"data dir not found: $dir")
     Files.createDirectories(Paths.get(outDir))
-    val spark = GraftSession.local()
+    val spark = GraftSession.local(PlansDump.Threads)
     names.foreach { name =>
       val plan = PlansDump.planFor(spark, name, dir)
       Files.write(Paths.get(outDir, s"${name}_$tag.txt"),

@@ -19,6 +19,11 @@ import graft.operators.StageMemo
   */
 object PlansDump {
 
+  /** Plans are dumped at local[32] on every machine: whether
+    * [[graft.Fixtures.spread]] adds a repartition, and so the plan text,
+    * depends on the local thread count. */
+  private[cli] val Threads = 32
+
   /** One representative per plan family, not all 124 — the point is a
     * readable audit, not an exhaustive dump. */
   val Flagship: Seq[String] = Seq(
@@ -165,7 +170,7 @@ object PlansDump {
     val out = args.lift(1).getOrElse("PLANS.md")
     require(java.nio.file.Files.isDirectory(Paths.get(dir)), s"data dir not found: $dir")
     println(s"[plans] data dir: $dir → $out")
-    val spark = GraftSession.local()
+    val spark = GraftSession.local(Threads)
     val sb = new StringBuilder
     sb.append("# Physical plans — flagship queries\n\n")
     sb.append(s"Generated against `$dir` (`graft.cli.PlansDump`). One query per\n")

@@ -1,7 +1,9 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Linearity probe for the 100 TB claims (SCALE.md): times the three heavy
   * corpus builds — the near-dup pipeline ([[graft.operators.Dedup.buildPipeline]]),
@@ -144,17 +146,7 @@ object ScaleProbe {
     require(Set("docs", "emb", "prof", "ppj", "stats", "snips", "bpe", "bpek",
       "dsir", "nbq", "lm", "all")(family),
       s"unknown family: $family")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val sizes = factors
     val doSnips = family == "snips"

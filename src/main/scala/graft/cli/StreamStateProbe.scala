@@ -1,9 +1,9 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.GraftSession
 import graft.streaming.{StreamingDedup, StreamingSessionizer, TwsDedup}
 
 /** State-scale probe for the streaming twins (VERDICT r9 #6): the batch
@@ -42,16 +42,9 @@ object StreamStateProbe {
   def main(args: Array[String]): Unit = {
     val maxKeys = if (args.length > 0) args(0).toLong else 1000000L
     val decades = Iterator.iterate(10000L)(_ * 10).takeWhile(_ <= maxKeys).toSeq
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // streaming: no AQE
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE stays on here: each stream runs in its own session clone, which
+    // StreamExecution plans with AQE off
+    val spark = GraftSession.local()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -1,7 +1,8 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Builds the FULL 10-table fixture at `factor`× the base SF using the
   * [[ScaleProbe]] rotated-replica constructions (VERDICT r11 #2: one
@@ -28,16 +29,7 @@ object TenXCorpus {
     val outDir = args.lift(1).getOrElse("/tmp/graft_sf10x")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1 && factor <= 26, "factor must be in [1, 26]")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val par = spark.sparkContext.defaultParallelism
 
     def base(t: String) = spark.read.parquet(s"$baseDir/$t.parquet")

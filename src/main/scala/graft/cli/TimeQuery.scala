@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev tool: time one named [[graft.SparkEntry.queries]] entry in isolation.
   *
@@ -21,17 +21,7 @@ object TimeQuery {
     // fresh-JVM fork) there is no sbt "running (fork) …" echo, so log
     // parsers (tools/adjudicate_bench.py) key off THIS line (ADVICE r15)
     println(s"timequery $name @ $sfDir")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000000L).selectExpr("sum(id)").collect()
     // single query: memo cleared per rep (each rep pays the full build).
     // comma-separated list: memo cleared ONCE up front, then the queries

@@ -753,13 +753,17 @@ object EventOps {
     * round-2 form appended the rule to the SHARED session — every later
     * query in the same Bench/Verify process was then planned with the rule
     * active). `newSession` shares the SparkContext and table cache but
-    * isolates SQL conf and experimental optimizations. */
-  private def bandedSession(spark: SparkSession, force: Boolean): SparkSession = {
-    val s = spark.newSession()
-    s.experimental.extraOptimizations = Seq(graft.plans.BandedRangeJoinRule)
-    s.conf.set(graft.plans.BandedRangeJoinRule.ForceConf, force.toString)
-    s
-  }
+    * isolates SQL conf and experimental optimizations. One clone per
+    * (parent, `force`), kept in the parent's scoped state: a clone per
+    * construction would re-infer every fixture schema it reads. The clone
+    * holds no reference to its parent. */
+  private def bandedSession(spark: SparkSession, force: Boolean): SparkSession =
+    graft.GraftSession.scoped(spark, s"banded_session|force=$force") {
+      val s = spark.newSession()
+      s.experimental.extraOptimizations = Seq(graft.plans.BandedRangeJoinRule)
+      s.conf.set(graft.plans.BandedRangeJoinRule.ForceConf, force.toString)
+      s
+    }
 
   /** The NAIVE range join, run through [[graft.plans.BandedRangeJoinRule]]:
     * the query is the declarative range predicate a user would write, and

@@ -815,19 +815,43 @@ object ProfileQueries {
     * consumers re-sort. Pool of 3: enough to fill the tail, not enough to
     * thrash (guide: "2-3 jobs in flight is plenty"). Under a plan audit
     * (checked here, on the caller thread, before any fork) the branches
-    * are unioned as they are. */
-  private def pooledUnion(frames: Seq[DataFrame], poolSize: Int = 3): DataFrame =
+    * are unioned as they are.
+    *
+    * Failure: the branches' jobs share one job tag, set inside the pooled
+    * thread that submits them. Branches are awaited in completion order,
+    * so the first failure surfaces at once: branches not yet started are
+    * skipped, the tag is cancelled until every started branch has returned
+    * (a job submitted after the first cancel dies too), and the branch's
+    * error is rethrown. */
+  private[graft] def pooledUnion(frames: Seq[DataFrame], poolSize: Int = 3): DataFrame =
     if (graft.operators.StageMemo.isAuditing) frames.reduce(_ union _)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val futs = frames.map(f => scala.concurrent.Future(f.localCheckpoint(true)))
-        futs.map(f =>
-            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-          .reduce(_ union _)
-      } finally pool.shutdown()
+      import java.util.concurrent.{ExecutorCompletionService, ExecutionException, Executors, TimeUnit}
+      val sc = frames.head.sparkSession.sparkContext
+      val tag = s"graft-pooled-union-${java.util.UUID.randomUUID()}"
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val pool = Executors.newFixedThreadPool(poolSize)
+      val done = new ExecutorCompletionService[(Int, DataFrame)](pool)
+      frames.zipWithIndex.foreach { case (f, i) =>
+        done.submit { () =>
+          if (failed.get) (i, null)
+          else {
+            sc.addJobTag(tag)
+            try (i, f.localCheckpoint(true)) finally sc.removeJobTag(tag)
+          }
+        }
+      }
+      pool.shutdown()
+      val out = new Array[DataFrame](frames.size)
+      frames.foreach { _ =>
+        try { val (i, df) = done.take().get(); out(i) = df }
+        catch { case e: ExecutionException =>
+          failed.set(true)
+          do sc.cancelJobsWithTag(tag) while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+          throw e.getCause
+        }
+      }
+      out.reduce(_ union _)
     }
 
   private def perTableCatalogFrames(spark: SparkSession, dir: String): Seq[DataFrame] =

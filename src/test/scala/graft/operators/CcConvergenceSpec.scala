@@ -23,10 +23,10 @@ class CcConvergenceSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
   test("fixture near-dup graph converges within the shallow-graph round budget") {
-    StageMemo.clear() // force a fresh fixpoint run (the memo would skip it)
-    val labels = Dedup.dedupClusters(spark, SparkSuite.Sf001)
+    StageMemo.clear() // the pair graph below is built fresh, not read from a memo
+    val (edges, seed) = Dedup.nearDupGraph(spark, SparkSuite.Sf001)
+    val (labels, rounds) = Dedup.propagateMinLabels(edges, seed, maxIters = 20)
     assert(labels.count() > 0)
-    val rounds = Dedup.lastConvergenceRounds
     // JumpAfter = 4 plain rounds, then pointer jumping halves label paths:
     // the fixture's shallow components must converge in <= 8 rounds (one
     // extra round is the convergence-detection pass itself)
@@ -42,8 +42,7 @@ class CcConvergenceSpec extends AnyFunSuite {
     val edges = raw.unionAll(raw.select($"id_b".as("id_a"), $"id_a".as("id_b")))
     val seed = edges.select($"id_a".as("doc_id")).distinct()
       .withColumn("label", $"doc_id")
-    Dedup.propagateMinLabels(edges, seed, maxIters = 20)
-    val rounds = Dedup.lastConvergenceRounds
+    val (_, rounds) = Dedup.propagateMinLabels(edges, seed, maxIters = 20)
     // 4 plain rounds cover distance 4; jumping then doubles reach per
     // round: distance-128 labels need ~log2(128/4) ≈ 5-6 jumped rounds
     assert(rounds <= 14, s"diameter-128 chain took $rounds rounds — jumping regressed")

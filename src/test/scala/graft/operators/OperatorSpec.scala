@@ -182,7 +182,7 @@ class OperatorSpec extends AnyFunSuite {
     val edges = raw.unionAll(raw.select($"id_b".as("id_a"), $"id_a".as("id_b")))
     val seed = edges.select($"id_a".as("doc_id")).distinct()
       .withColumn("label", $"doc_id")
-    val labels = Dedup.propagateMinLabels(edges, seed, maxIters = 10)
+    val (labels, _) = Dedup.propagateMinLabels(edges, seed, maxIters = 10)
     val byDoc = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (10L to 16L).foreach(d => assert(byDoc(d) == 10L, s"doc $d got ${byDoc(d)}"))
     Seq(20L, 21L).foreach(d => assert(byDoc(d) == 20L))
@@ -200,7 +200,7 @@ class OperatorSpec extends AnyFunSuite {
     val edges = raw.unionAll(raw.select($"id_b".as("id_a"), $"id_a".as("id_b")))
     val seed = edges.select($"id_a".as("doc_id")).distinct()
       .withColumn("label", $"doc_id")
-    val labels = Dedup.propagateMinLabels(edges, seed, maxIters = 14)
+    val (labels, _) = Dedup.propagateMinLabels(edges, seed, maxIters = 14)
     val byDoc = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (100L to 160L).foreach(d => assert(byDoc(d) == 100L, s"doc $d got ${byDoc(d)}"))
   }
@@ -220,7 +220,7 @@ class OperatorSpec extends AnyFunSuite {
     val edges = raw.unionAll(raw.select($"id_b".as("id_a"), $"id_a".as("id_b")))
     val seed = edges.select($"id_a".as("doc_id")).distinct()
       .withColumn("label", $"doc_id")
-    val prop = Dedup.propagateMinLabels(edges, seed, maxIters = 14)
+    val prop = Dedup.propagateMinLabels(edges, seed, maxIters = 14)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byDoc == prop)
   }

@@ -199,4 +199,26 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
     }.filter(_._2 > 0).toMap
     assert(got == expected)
   }
+
+  test("events_range_join_auto: a second construction reuses the banded clone (0 Spark jobs)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val spark = SparkSuite.spark
+    def construct(): DataFrame =
+      graft.SparkEntry.queries("events_range_join_auto")(spark, SparkSuite.Sf0001)
+    // the first construction clones the session and infers the events
+    // schema in it; a fresh clone per construction would infer it again
+    construct()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      construct()
+      Thread.sleep(1000) // listener bus is async; let any job event land
+      assert(jobs.get() == 0, s"the second construction ran ${jobs.get()} Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(spark.experimental.extraOptimizations.isEmpty,
+      "the banded rule leaked into the caller's session")
+  }
 }

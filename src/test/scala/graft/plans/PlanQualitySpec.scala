@@ -354,7 +354,7 @@ class PlanQualitySpec extends AnyFunSuite {
       override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
     // warm construction first: the very first read of a parquet path pays
-    // one schema-inference job, memoized in Fixtures.schemaCache — the
+    // one schema-inference job, memoized per session by Fixtures.table — the
     // assertion targets the steady state every repeated consumer sees
     audited().queryExecution.optimizedPlan
     spark.sparkContext.addSparkListener(l)
