@@ -551,10 +551,6 @@ object VectorExpressions {
   def double_bits(c: Column): Column =
     ColumnBridge.column(DoubleBits(ColumnBridge.expression(c)))
 
-  /** 58-bit-entropy rolling hash (same fold, wider prime modulus). */
-  def rolling_hash58(c: Column): Column =
-    ColumnBridge.column(StringRollingHash(ColumnBridge.expression(c), Mod58))
-
   /** One-pass SimHash over a text's whitespace words: per word the rolling
     * hash (base 31, `mod`), per bit a ±1 vote, sign-combined into a
     * `bits`-wide signature. Replaces the built-ins formulation —

@@ -4454,18 +4454,6 @@ object TextAnalysis {
        |  md5(list_aggregate(list_transform(postings, x -> CAST(x AS VARCHAR)), 'string_agg', ',')) AS postings_md5
        |FROM idx ORDER BY term""".stripMargin
 
-  def invertedIndexOracle(cap: Int = 10): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-       |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]
-       |  ))) AS term
-       |  FROM documents WHERE len(string_split(text, ' ')) >= 3
-       |)
-       |SELECT term, count(*) AS df,
-       |  list_sort(list(DISTINCT doc_id))[1:$cap] AS postings
-       |FROM toks GROUP BY term ORDER BY term""".stripMargin
-
   // --------------------------------------------- source TV-distance matrix
   /** Lexical similarity matrix between sources: TOTAL-VARIATION distance
     * between each pair's word distributions, exact in parts-per-million —

@@ -13,10 +13,14 @@ pandas dtype coercion. Consequences this deliberately reproduces:
     in pandas, so `2.0` vs Spark's int64 `2` FAILS here, as at the driver;
   - Array/Map/Struct output columns make `sort_values` RAISE, so a complex
     driver-facing projection fails loudly here first (round-3 lesson).
-Prints per-query OK/FAIL + a diff sample.
+Prints per-query OK/FAIL + a diff sample, each with its seconds: the DuckDB
+oracle SQL (`oracle`) and the Spark output's parquet read (`spark`) are
+timed separately, each including its pandas sort. Ends with the 10 slowest
+queries.
 """
 import json
 import sys
+import time
 
 import duckdb
 
@@ -39,6 +43,30 @@ def cells(df):
     return [tuple(str(v) for v in row) for row in df.itertuples(index=False, name=None)]
 
 
+def timed_frame(timing, side, make_rel):
+    """`frame(make_rel())`, recording its wall seconds in `timing[side]`."""
+    t0 = time.perf_counter()
+    try:
+        return frame(make_rel())
+    finally:
+        timing[side] = time.perf_counter() - t0
+
+
+def compare(name, s_df, d_df):
+    """The query's OK/FAIL line."""
+    s_cols, d_cols = list(s_df.columns), list(d_df.columns)
+    s_rows, d_rows = cells(s_df), cells(d_df)
+    if s_cols != d_cols:
+        return f"FAIL {name}: columns spark={s_cols} duck={d_cols}"
+    if s_rows != d_rows:
+        diffs = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
+        return (f"FAIL {name}: rows spark={len(s_rows)} duck={len(d_rows)}, "
+                f"first diffs: {diffs[:2]}"
+                + (f" spark_only_tail={s_rows[len(d_rows):][:1]}" if len(s_rows) > len(d_rows) else "")
+                + (f" duck_only_tail={d_rows[len(s_rows):][:1]}" if len(d_rows) > len(s_rows) else ""))
+    return f"OK   {name} ({len(s_rows)} rows)"
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
@@ -47,30 +75,28 @@ def main():
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
     n_ok = n_fail = 0
+    seconds = {}
     for name in sorted(oracles):
-        sql = oracles[name]
+        timing = {"oracle": 0.0, "spark": 0.0}
         try:
-            s_df = frame(con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'"))
-            d_df = frame(con.sql(sql))
+            s_df = timed_frame(timing, "spark",
+                               lambda: con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'"))
+            d_df = timed_frame(timing, "oracle", lambda: con.sql(oracles[name]))
         except Exception as e:
-            print(f"FAIL {name}: exception {e}")
-            n_fail += 1
-            continue
-        s_cols, d_cols = list(s_df.columns), list(d_df.columns)
-        s_rows, d_rows = cells(s_df), cells(d_df)
-        if s_cols != d_cols:
-            print(f"FAIL {name}: columns spark={s_cols} duck={d_cols}")
-            n_fail += 1
-        elif s_rows != d_rows:
-            diffs = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
-            print(f"FAIL {name}: rows spark={len(s_rows)} duck={len(d_rows)}, "
-                  f"first diffs: {diffs[:2]}"
-                  + (f" spark_only_tail={s_rows[len(d_rows):][:1]}" if len(s_rows) > len(d_rows) else "")
-                  + (f" duck_only_tail={d_rows[len(s_rows):][:1]}" if len(d_rows) > len(s_rows) else ""))
-            n_fail += 1
+            line = f"FAIL {name}: exception {e}"
         else:
-            print(f"OK   {name} ({len(s_rows)} rows)")
+            line = compare(name, s_df, d_df)
+        if line.startswith("OK"):
             n_ok += 1
+        else:
+            n_fail += 1
+        seconds[name] = timing["oracle"] + timing["spark"]
+        print(f"{line} [{seconds[name]:.2f} s: oracle {timing['oracle']:.2f} s, "
+              f"spark {timing['spark']:.2f} s]", flush=True)
+    slowest = sorted(seconds, key=seconds.get, reverse=True)[:10]
+    print(f"\nslowest {len(slowest)} of {len(seconds)} queries ({sum(seconds.values()):.1f} s in all):")
+    for name in slowest:
+        print(f"  {seconds[name]:8.2f} s  {name}")
     print(f"\n{n_ok} OK, {n_fail} FAIL")
     sys.exit(1 if n_fail else 0)
 
