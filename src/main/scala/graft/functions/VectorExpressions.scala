@@ -540,6 +540,64 @@ object VectorExpressions {
   private[graft] def gram_tfs(words: Column, n: Int): Column =
     ColumnBridge.column(GramTfs(ColumnBridge.expression(words), n))
 
+  /** `word_ngrams(words, n)`: the row's sliding word n-grams in window
+    * order — gram i is words i … i+n-1 joined by ' ' with `concat_ws`
+    * semantics (null words skipped). The native twin of
+    * `transform(sequence(1, size(ws) - n + 1), i -> concat_ws(' ', ws[i], …, ws[i+n-1]))`:
+    * inside that lambda Spark re-evaluates `ws` — for `split(text, ' ')` a
+    * whole split — once per element (no common-subexpression elimination
+    * across a HOF boundary), so shingling cost O(words²) per row. Here the
+    * split is an ordinary child, evaluated once per row, and the windows
+    * are one pass. Fewer than n words → empty array (where the HOF form's
+    * `sequence` would run descending); null array → null. Bit-equal to the
+    * HOF form in VectorExpressionsSpec. */
+  case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+    override def dataType: DataType = child.dataType match {
+      case ArrayType(st: StringType, _) => ArrayType(st, containsNull = false)
+      case _ => ArrayType(StringType, containsNull = false)
+    }
+    override def checkInputDataTypes() = child.dataType match {
+      case ArrayType(_: StringType, _) if n >= 1 =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"word_ngrams requires array<string> input and n >= 1, got ${child.dataType}, n=$n")
+    }
+
+    override protected def nullSafeEval(input: Any): Any =
+      wordNgramsJava(input.asInstanceOf[ArrayData], n)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c =>
+        s"graft.functions.VectorExpressions.wordNgramsJava($c, $n)")
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** Kernel for [[WordNgrams]]: `UTF8String.concatWs` per window is
+    * `concat_ws`'s own implementation, so null words drop out the same way. */
+  def wordNgramsJava(words: ArrayData, n: Int): ArrayData = {
+    val grams = new Array[Any](math.max(words.numElements() - n + 1, 0))
+    val window = new Array[UTF8String](n)
+    var i = 0
+    while (i < grams.length) {
+      var k = 0
+      while (k < n) {
+        window(k) = if (words.isNullAt(i + k)) null else words.getUTF8String(i + k)
+        k += 1
+      }
+      grams(i) = UTF8String.concatWs(Space, window: _*)
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(grams)
+  }
+
+  def word_ngrams(words: Column, n: Int): Column =
+    ColumnBridge.column(WordNgrams(ColumnBridge.expression(words), n))
+
   // ------------------------------------------------------------ Column API
 
   def vec_dot(a: Column, b: Column): Column =

@@ -115,15 +115,13 @@ object Dedup {
   private val NumHashes = 8
   private val BandSize = 2 // 4 bands of 2 → catches J ≳ 0.6 pairs reliably
 
-  /** Word-level 3-gram shingles of a text column (1-based element_at).
-    * Precondition: the text has ≥3 words — callers must pre-filter
-    * (`sequence(1, n-2)` would run DESCENDING for shorter texts). */
-  def shingles(c: Column): Column = {
-    val ws = split(c, " ")
-    transform(
-      sequence(lit(1), size(ws) - 2),
-      i => concat_ws(" ", element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2)))
-  }
+  /** Word-level 3-gram shingles of a text column: the native
+    * [[graft.functions.VectorExpressions.WordNgrams]] kernel over
+    * `split(text, ' ')`, so the text is split once per row. A text under 3
+    * words gives an empty array; callers still keep the oracle's ≥3-word
+    * filter ([[hasShingles]]), which decides which documents enter. */
+  def shingles(c: Column): Column =
+    graft.functions.VectorExpressions.word_ngrams(split(c, " "), 3)
 
   /** ≥3-word guard matching the oracle's `WHERE len(...) >= 3`. */
   private def hasShingles(c: Column): Column = size(split(c, " ")) >= 3
@@ -167,7 +165,7 @@ object Dedup {
     }
 
   /** (doc_id, shd) distinct shingle sets — DERIVED per use (one scan +
-    * codegen'd split/transform), not materialized; see [[sharedSignatures]]
+    * split + n-gram kernel), not materialized; see [[sharedSignatures]]
     * for why. SORTED (r16): shd's only consumers are `size(...)` and the
     * per-pair intersection counts, so the set is emitted in sort_array
     * order once per doc and the pair verifications run the linear
@@ -337,10 +335,14 @@ object Dedup {
     // join): each capped bucket has exactly one rn == cap+1 row, and the
     // skipped enumerations are Σ(rn−2) over these rows — zero extra scan,
     // zero shuffle, observable from any action that runs the build
-    val tail = ranked.filter(col("rn") > MaxBucket)
+    // — except in a plan audit, which rebuilds each memo stage as fresh
+    // lineage, so a query reading the pair graph twice would carry two
+    // same-named observes, which Spark rejects (DUPLICATED_METRICS_NAME)
+    val overCap = ranked.filter(col("rn") > MaxBucket)
+    val tail = (if (StageMemo.isAuditing) overCap else overCap
       .observe(CapTelemetry.observeName(tag),
         sum(when(col("rn") === MaxBucket + 1, 1L).otherwise(0L)).as("capped_buckets"),
-        sum(col("rn") - 2).as("dropped_pairs"))
+        sum(col("rn") - 2).as("dropped_pairs")))
       .select(keyCols :+ col("doc_id").as("id_b"): _*)
     val starPairs = rep.join(tail, keys).select(outCols.head, outCols.tail: _*)
     densePairs.unionAll(starPairs).distinct()
@@ -2501,15 +2503,8 @@ object Dedup {
       // CPU-bound shingle explode across cores (same gotcha as
       // corpusWithNearDups — tokenize was 6 s single-threaded at sf0.1)
       .repartition(spark.sparkContext.defaultParallelism)
-    // hoist the split: inside shingles()'s lambda, `split(text)` is
-    // re-evaluated per element (no CSE across a HOF boundary) — ~75
-    // splits/doc; pre-splitting to an array column makes tokenize 5x
-    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-    val toks = ws.select(col("doc_id"),
-      explode(array_distinct(transform(
-        sequence(lit(1), size(col("ws")) - 2),
-        i => concat_ws(" ", element_at(col("ws"), i), element_at(col("ws"), i + 1),
-          element_at(col("ws"), i + 2))))).as("tok"))
+    val toks = docs.select(col("doc_id"),
+      explode(array_distinct(shingles(col("text")))).as("tok"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy("doc_id").orderBy(col("df"), col("tok"))
     toks.join(dfreq, "tok")

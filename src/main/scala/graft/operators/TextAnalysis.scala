@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Fixtures.table
+import graft.functions.VectorExpressions.word_ngrams
 
 /** Text-analysis operators for LLM-data pipelines (BASELINE.json north star):
   * token counting, quality scoring, language ID, and document fingerprinting
@@ -1056,6 +1057,14 @@ object TextAnalysis {
       |ORDER BY lang, rank""".stripMargin
 
   // -------------------------------------------------------- decontamination
+  /** (doc_id, gram) rows: every word 5-gram of each ≥5-word text, the
+    * overlap unit of [[decontaminate]] and [[evalBurn]]. */
+  private def fiveGrams(df: DataFrame): DataFrame = {
+    val ws = split(col("text"), " ")
+    df.filter(size(ws) >= 5)
+      .select(col("doc_id"), explode(word_ngrams(ws, 5)).as("gram"))
+  }
+
   /** Benchmark DECONTAMINATION: flag training documents sharing any word
     * 5-gram with an evaluation set — the overlap filter every serious
     * pretraining pipeline runs (an eval question leaked into training data
@@ -1071,17 +1080,10 @@ object TextAnalysis {
     * matching (doc, gram) rows reach the one group-by shuffle. Nothing is
     * ever joined corpus × corpus. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    def grams(df: DataFrame): DataFrame = {
-      val ws = split(col("text"), " ")
-      df.filter(size(ws) >= 5)
-        .select(col("doc_id"), explode(
-          transform(sequence(lit(1), size(ws) - 4),
-            i => concat_ws(" ", (0 until 5).map(o => element_at(ws, i + o)): _*))).as("gram"))
-    }
     val corpus = Dedup.corpusWithNearDups(spark, dir)
-    val evalGrams = grams(corpus.filter(col("doc_id") >= Dedup.IdOffset && col("doc_id") % 97 === 0))
+    val evalGrams = fiveGrams(corpus.filter(col("doc_id") >= Dedup.IdOffset && col("doc_id") % 97 === 0))
       .select("gram").distinct()
-    grams(corpus.filter(col("doc_id") < Dedup.IdOffset))
+    fiveGrams(corpus.filter(col("doc_id") < Dedup.IdOffset))
       .join(broadcast(evalGrams), "gram")
       .groupBy("doc_id")
       .agg(countDistinct(col("gram")).as("n_shared_grams"))
@@ -1090,8 +1092,8 @@ object TextAnalysis {
   }
 
   /** Version-stable DuckDB 5-gram expression: explicit `list_extract`
-    * indexing over a pre-split `ws` column, mirroring the Spark
-    * `element_at(ws, i + o)` construction exactly. List SLICING
+    * indexing over a pre-split `ws` column, the windows Spark's
+    * `word_ngrams(ws, 5)` emits. List SLICING
     * (`ws[i:i+4]`) is deliberately avoided everywhere — its bound
     * semantics are DuckDB-version-sensitive (inclusive vs exclusive upper
     * bound changed across releases), which made two driver-gate oracles
@@ -1140,19 +1142,12 @@ object TextAnalysis {
     * whose Expand replicates (id, id, gram, source) rows bounded by the
     * leak volume, never the corpus. */
   def evalBurn(spark: SparkSession, dir: String): DataFrame = {
-    def grams(df: DataFrame): DataFrame = {
-      val ws = split(col("text"), " ")
-      df.filter(size(ws) >= 5)
-        .select(col("doc_id"), explode(
-          transform(sequence(lit(1), size(ws) - 4),
-            i => concat_ws(" ", (0 until 5).map(o => element_at(ws, i + o)): _*))).as("gram"))
-    }
     val corpus = Dedup.corpusWithNearDups(spark, dir)
     val isEval = col("doc_id") >= Dedup.IdOffset && col("doc_id") % 97 === 0
     val evalDocs = corpus.filter(isEval)
-    val evalGrams = grams(evalDocs)
+    val evalGrams = fiveGrams(evalDocs)
       .select(col("doc_id").as("eval_id"), col("gram")).distinct()
-    val trainGrams = grams(corpus.filter(col("doc_id") < Dedup.IdOffset))
+    val trainGrams = fiveGrams(corpus.filter(col("doc_id") < Dedup.IdOffset))
       .select(col("doc_id").as("train_id"), col("gram")).distinct()
     val src = table(spark, dir, "documents")
       .select(col("doc_id").as("train_id"), col("source"))
@@ -1453,8 +1448,7 @@ object TextAnalysis {
     Dedup.corpusWithNearDups(spark, dir)
       .filter(size(ws) >= 5)
       .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(1), size(ws) - 4),
-          i => md5(concat_ws(" ", (0 until 5).map(o => element_at(ws, i + o)): _*))))).as("g"))
+        transform(word_ngrams(ws, 5), g => md5(g)))).as("g"))
   }
 
   /** The distinct (doc, 5-gram-hash) SPAN TABLE, materialized once per
@@ -1633,9 +1627,7 @@ object TextAnalysis {
     val ws = split(col("text"), " ")
     val corpus = Dedup.corpusWithNearDups(spark, dir).filter(size(ws) >= 5)
     val spansPos = corpus
-      .select(col("doc_id"), posexplode(
-        transform(sequence(lit(1), size(ws) - 4),
-          i => md5(concat_ws(" ", (0 until 5).map(o => element_at(ws, i + o)): _*)))))
+      .select(col("doc_id"), posexplode(transform(word_ngrams(ws, 5), g => md5(g))))
       .select(col("doc_id"), (col("pos") + 1).cast("bigint").as("pos"), col("col").as("g"))
     // covered positions = union length of the dup spans' [p, p+4] intervals:
     // an O(spans)-per-doc fold over the SORTED span starts, with the
@@ -4408,11 +4400,7 @@ object TextAnalysis {
     val docs = table(spark, dir, "documents")
       .filter(size(split(col("text"), " ")) >= 3)
       .repartition(spark.sparkContext.defaultParallelism)
-    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-    ws.select(col("doc_id"), explode(array_distinct(transform(
-        sequence(lit(1), size(col("ws")) - 2),
-        i => concat_ws(" ", element_at(col("ws"), i), element_at(col("ws"), i + 1),
-          element_at(col("ws"), i + 2))))).as("term"))
+    docs.select(col("doc_id"), explode(array_distinct(Dedup.shingles(col("text")))).as("term"))
       .groupBy("term")
       .agg(count(lit(1)).as("df"),
         slice(sort_array(collect_set(col("doc_id"))), 1, cap).as("postings"))

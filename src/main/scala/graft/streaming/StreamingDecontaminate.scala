@@ -27,17 +27,10 @@ import org.apache.spark.sql.functions._
   */
 object StreamingDecontaminate {
 
-  /** Row-local word 5-gram array (same split/concat semantics as the batch
-    * op; the stream==batch spec keeps them locked). Guarded to an empty
-    * array under 5 words — `sequence(1, n)` with n<1 would generate a
-    * DESCENDING sequence, not an empty one. */
-  private def gramsArr(text: Column): Column = {
-    val ws = split(text, " ")
-    when(size(ws) >= 5,
-      transform(sequence(lit(1), size(ws) - 4),
-        i => concat_ws(" ", (0 until 5).map(o => element_at(ws, i + o)): _*)))
-      .otherwise(array())
-  }
+  /** Row-local word 5-gram array (the batch op's kernel; the stream==batch
+    * spec keeps them locked). Empty under 5 words. */
+  private def gramsArr(text: Column): Column =
+    graft.functions.VectorExpressions.word_ngrams(split(text, " "), 5)
 
   /** The eval set's distinct grams as a single-row, single-array frame —
     * the broadcast side. Eval docs are the batch op's: every 97th

@@ -320,4 +320,52 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(out(3).getInt(0) == out(3).getInt(1)) // both contain null → counted once, matching array_intersect
     assert(out(4).getInt(0) == 1 && out(4).getInt(1) == 1)
   }
+
+  /** The HOF n-gram form [[VectorExpressions.WordNgrams]] replaced, kept
+    * only here as the reference: defined for arrays of at least n words. */
+  private def wordNgramsHof(ws: org.apache.spark.sql.Column, n: Int) =
+    transform(sequence(lit(1), size(ws) - (n - 1)),
+      i => concat_ws(" ", (0 until n).map(o => element_at(ws, i + o)): _*))
+
+  test("word_ngrams equals the HOF n-gram form on every sf0.01 document (n=3 and n=5)") {
+    val ws = split(col("text"), " ")
+    // the documents plus their perturbed near-dup copies: the rows the
+    // shingle and span queries see
+    val docs = Dedup.corpusWithNearDups(spark, SparkSuite.Sf001)
+    Seq(3, 5).foreach { n =>
+      val rows = docs.filter(size(ws) >= n).select(
+        VectorExpressions.word_ngrams(ws, n).as("native"),
+        wordNgramsHof(ws, n).as("hof"))
+      assert(rows.count() > 0L, s"n=$n: no document has $n words")
+      assert(rows.filter(!(col("native") <=> col("hof"))).count() == 0L, s"n=$n grams differ")
+    }
+  }
+
+  test("word_ngrams edge rows: spaces, UTF-8, exactly n, under n, null element, null input") {
+    val rows = spark.sql(
+      """SELECT * FROM VALUES
+        |  (0, split('a  b c d e', ' ')),
+        |  (1, split(' a b c d ', ' ')),
+        |  (2, split('naïve café 日本語 テキスト 🙂 x', ' ')),
+        |  (3, split('one two three four five', ' ')),
+        |  (4, array('p', CAST(NULL AS STRING), 'q', 'r', 's', 't')),
+        |  (5, split('one two', ' ')),
+        |  (6, CAST(NULL AS ARRAY<STRING>))
+        |  AS t(id, ws)""".stripMargin)
+    Seq(3, 5).foreach { n =>
+      val full = rows.filter(size(col("ws")) >= n)
+      val diffs = full.filter(!(VectorExpressions.word_ngrams(col("ws"), n) <=>
+        wordNgramsHof(col("ws"), n)))
+      assert(full.count() == 5L && diffs.count() == 0L, s"n=$n")
+    }
+    val got = rows.select(col("id"), VectorExpressions.word_ngrams(col("ws"), 5).as("g"))
+      .collect().map(r => r.getInt(0) -> Option(r.getSeq[String](1))).toMap
+    assert(got(0).contains(Seq("a  b c d", " b c d e")))
+    assert(got(1).contains(Seq(" a b c d", "a b c d ")))
+    assert(got(2).contains(Seq("naïve café 日本語 テキスト 🙂", "café 日本語 テキスト 🙂 x")))
+    assert(got(3).contains(Seq("one two three four five")))
+    assert(got(4).contains(Seq("p q r s", "q r s t"))) // concat_ws skips the null word
+    assert(got(5).contains(Seq.empty[String]))          // under n words: empty, not null
+    assert(got(6).isEmpty)                               // null array → null
+  }
 }

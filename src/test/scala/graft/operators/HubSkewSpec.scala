@@ -49,19 +49,21 @@ class HubSkewSpec extends AnyFunSuite {
     base >= HubBase && base < HubBase + HubN
   }
 
-  /** Per-task shuffle-write records + run times, restricted to jobs in
-    * our job group (other suites may share the session). */
+  /** Per-task shuffle-write records + CPU times (ms), restricted to jobs in
+    * our job group (other suites may share the session). CPU time, not run
+    * time: a task's wall clock also counts the time it waits behind other
+    * processes on a busy box, which reads as skew. */
   private class GroupTaskStats(group: String) extends SparkListener {
     private val myStages = TrieMap.empty[Int, Unit]
     val written = TrieMap.empty[Long, Long]
-    val runTime = TrieMap.empty[Long, Long]
+    val cpuTime = TrieMap.empty[Long, Long]
     override def onJobStart(js: SparkListenerJobStart): Unit =
       if (Option(js.properties).exists(p => group == p.getProperty("spark.jobGroup.id")))
         js.stageIds.foreach(id => myStages.put(id, ()))
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
       if (myStages.contains(te.stageId) && te.taskMetrics != null) {
         written.put(te.taskInfo.taskId, te.taskMetrics.shuffleWriteMetrics.recordsWritten)
-        runTime.put(te.taskInfo.taskId, te.taskMetrics.executorRunTime)
+        cpuTime.put(te.taskInfo.taskId, te.taskMetrics.executorCpuTime / 1000000L)
       }
   }
 
@@ -94,13 +96,13 @@ class HubSkewSpec extends AnyFunSuite {
     assert(writes.nonEmpty, "listener saw no tasks — job-group filter broken?")
     assert(writes.max <= 200000L,
       s"one task wrote ${writes.max} shuffle records — quadratic bucket survived the cap")
-    // skew, as time: when any task is slow enough to measure, it must not
-    // dwarf the median (guarded against millisecond-noise on a busy box)
-    val times = stats.runTime.values.filter(_ > 0L).toSeq.sorted
+    // skew, as CPU time: when any task is costly enough to measure, it must
+    // not dwarf the median (guarded against millisecond noise)
+    val times = stats.cpuTime.values.filter(_ > 0L).toSeq.sorted
     if (times.nonEmpty && times.max >= 500L) {
       val median = math.max(times(times.size / 2), 20L)
       assert(times.max <= 25L * median,
-        s"max task ${times.max} ms vs median $median ms — skew bound blown")
+        s"max task CPU ${times.max} ms vs median $median ms — skew bound blown")
     }
   }
 
