@@ -37,15 +37,21 @@ object Fixtures {
     else df
   }
 
-  /** Spread a CPU-bound derivation across cores when the input parquet
-    * reads as fewer splits than the session's parallelism — the local
-    * single-row-group fixtures read as ONE scan task, serializing every
-    * downstream explode/partial-aggregate on one core (guide §2.5: input
-    * skew from an unsplittable file → repartition after the read). No-op
-    * (no shuffle node) when the scan already yields core-count splits, so
-    * at production split counts nothing changes. Round-robin repartition
-    * is deterministic (sort-before-repartition), so results are
-    * partitioning-independent for any deterministic derivation. */
+  /** The ONE spreading policy for scan-rooted, CPU-bound derivations:
+    * round-robin repartition to the session's parallelism only when the
+    * input reads as fewer splits than that. A local single-row-group
+    * fixture scans as ONE task and would serialize every downstream
+    * explode/partial aggregate on one core (guide §2.5: input skew from an
+    * unsplittable file → repartition after the read). A multi-file or
+    * multi-row-group input already scans wide, and there an unconditional
+    * `repartition(defaultParallelism)` would be a full shuffle of the input
+    * plus Spark's `sortBeforeRepartition` sort of every row, paid by each
+    * consumer — at 100 TB, the corpus shuffled once per query for nothing.
+    * So no exchange is planned for a wide scan. Round-robin repartition is
+    * deterministic (sort-before-repartition), and every call site is a
+    * deterministic derivation, so rows never depend on the layout. Operator
+    * code calls this rather than `repartition(defaultParallelism)`
+    * (`SpreadLayoutSpec` scans for it). */
   private[graft] def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // `df.rdd.getNumPartitions` forces a physical-plan translation on the

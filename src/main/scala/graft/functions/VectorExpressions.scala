@@ -238,35 +238,47 @@ object VectorExpressions {
   private val HexDigits = "0123456789abcdef".toCharArray
 
   /** Static helper for generated code: one pass over the shingles, tracking
-    * the min hex digest per hash index. */
+    * the min digest per hash index. Nothing is allocated per (shingle,
+    * hash): the `"h|"` prefixes are built once per call, each shingle's
+    * bytes are taken once, and each digest lands in one reused buffer
+    * (`digest(buf, 0, 16)` also resets the instance). Raw digests compare
+    * unsigned-lexicographically, which is the order of their lowercase hex
+    * forms, so only the `numHashes` minima are hex-encoded. An empty input
+    * gives nulls, as `array_min` of an empty array does. */
   def minhashJava(shingles: ArrayData, numHashes: Int): ArrayData = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val minima = new Array[String](numHashes)
+    val prefixes = Array.tabulate(numHashes)(h => s"$h|".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val minima = new Array[Array[Byte]](numHashes)
+    val dig = new Array[Byte](16)
     val n = shingles.numElements()
     var i = 0
     while (i < n) {
-      val shingle = shingles.getUTF8String(i)
+      val shingle = shingles.getUTF8String(i).getBytes
       var h = 0
       while (h < numHashes) {
-        md.reset()
-        md.update(s"$h|".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md.update(shingle.getBytes)
-        val dig = md.digest()
-        val hex = new Array[Char](32)
-        var j = 0
-        while (j < 16) {
-          hex(2 * j) = HexDigits((dig(j) >> 4) & 0xf)
-          hex(2 * j + 1) = HexDigits(dig(j) & 0xf)
-          j += 1
-        }
-        val s = new String(hex)
-        if (minima(h) == null || s.compareTo(minima(h)) < 0) minima(h) = s
+        md.update(prefixes(h))
+        md.update(shingle)
+        md.digest(dig, 0, 16)
+        if (minima(h) == null) minima(h) = dig.clone()
+        else if (java.util.Arrays.compareUnsigned(dig, minima(h)) < 0)
+          System.arraycopy(dig, 0, minima(h), 0, 16)
         h += 1
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      minima.map(m => UTF8String.fromString(m): AnyRef))
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(minima.map { m =>
+      if (m == null) null
+      else {
+        val hex = new Array[Char](32)
+        var j = 0
+        while (j < 16) {
+          hex(2 * j) = HexDigits((m(j) >> 4) & 0xf)
+          hex(2 * j + 1) = HexDigits(m(j) & 0xf)
+          j += 1
+        }
+        UTF8String.fromString(new String(hex)): AnyRef
+      }
+    })
   }
 
   def minhash_sig(shingles: Column, numHashes: Int): Column =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Fixtures.table
+import graft.Fixtures.{spread, table}
 
 /** Deduplication operators for LLM-data pipelines: exact (hash group-by),
   * MinHash+LSH banding, SimHash, and n-gram Jaccard verification.
@@ -29,16 +29,15 @@ object Dedup {
   private[graft] val IdOffset = 1000000L
 
   /** documents ∪ perturbed(documents): plants one near-duplicate per doc.
-    * Repartitioned to the cluster's parallelism: the fixture file is a
-    * single small parquet (1-2 input splits), and the downstream
-    * shingle/signature stages are CPU-bound — without the repartition all
-    * hashing lands on one or two cores. */
+    * [[graft.Fixtures.spread]]: a single-file fixture scans as 1-2 splits
+    * and the downstream shingle/signature stages are CPU-bound, so it is
+    * spread across cores; a multi-file corpus already scans wide and is
+    * read in place, with no shuffle. */
   def corpusWithNearDups(spark: SparkSession, dir: String): DataFrame = {
     val d = table(spark, dir, "documents").select("doc_id", "text")
-    d.unionAll(d.select(
+    spread(d.unionAll(d.select(
       (col("doc_id") + IdOffset).as("doc_id"),
-      expr("substring(text, instr(text, ' ') + 1)").as("text")))
-      .repartition(spark.sparkContext.defaultParallelism)
+      expr("substring(text, instr(text, ' ') + 1)").as("text"))))
   }
 
   private[operators] val corpusSql: String =
@@ -233,18 +232,6 @@ object Dedup {
        |)""".stripMargin
   }
 
-  /** The capped pair generation from ANY (doc_id, bucket-key...) frame —
-    * the shared mechanism behind every LSH-family bucket self-join
-    * (minhash bands AND the simhash block-pair multi-index; a cap
-    * special-cased in one family leaves the other quadratic under the
-    * same template hub). Both join legs filter their inputs to bounded
-    * bucket slices BEFORE the join — the dense leg's groups are ≤ cap
-    * rows a side, the star leg's build side is 1 row per bucket — so no
-    * task ever enumerates a quadratic bucket (an equi-join evaluates
-    * every same-key row combination even when a post-filter would
-    * discard it). Output is the DISTINCT (id_a, id_b) pair set across
-    * buckets; the distinct's input is bounded at keys-per-doc × the
-    * linear capped output, so it never sees quadratic volume either. */
   /** Cap-policy TELEMETRY (VERDICT r8 #6): the cap is correct under the
     * oracle, but on a hub-heavy corpus an operator should be able to SEE
     * how much pair enumeration the cap skipped. Every [[cappedBucketPairs]]
@@ -292,60 +279,58 @@ object Dedup {
     def last(tag: String): Option[(Long, Long)] = metrics.get(tag)
   }
 
-  /** `keep`: key columns to RETAIN in the output alongside (id_a, id_b) —
+  /** The capped pair generation from ANY (doc_id, bucket-key...) frame —
+    * the shared mechanism behind every LSH-family bucket self-join
+    * (minhash bands, the banding sweep AND the simhash block-pair
+    * multi-index; a cap special-cased in one family leaves the other
+    * quadratic under the same template hub). Output is the DISTINCT
+    * (keep…, id_a, id_b) set of the [[cappedPairsSql]] twin.
+    *
+    * ONE ranking per bucket: one hash exchange on the bucket keys, one
+    * sort, one Window, and every pair is emitted ROW-LOCALLY from it. On
+    * the doc_id-ordered bucket each row carries its rank `rn`, the bucket
+    * representative `rep = first(doc_id)` and the ids of the (at most
+    * cap−1) rows before it, `prev`. A row with rn ≤ cap pairs with all of
+    * `prev` (the dense leg: every rank pair a < b ≤ cap, id order = rank
+    * order); a row past the cap pairs with `rep` only (the star leg, which
+    * keeps the bucket connected). No leg filters on `rn` before the pairs
+    * exist — such a filter lets Spark push a `WindowGroupLimit` below the
+    * exchange, which replans the ranking once per leg — and there is no
+    * join, so nothing is broadcast or re-shuffled per leg. Per-row state is
+    * the bounded `prev` list (≤ cap−1 ids), so no task enumerates or
+    * collects a quadratic bucket, and the pair volume is ≤ cap²/2 + n per
+    * bucket. The distinct's input is bounded at keys-per-doc × that linear
+    * output.
+    *
+    * `keep`: key columns to RETAIN in the output alongside (id_a, id_b) —
     * lets several bucket families (e.g. the banding sweep's four configs)
-    * share ONE window + join + distinct by folding the family id into the
-    * bucket key; pairs are then distinct per kept-key group, exactly as if
-    * each family ran its own call. Must be a subset of `keys`. */
+    * share ONE window + distinct by folding the family id into the bucket
+    * key; pairs are then distinct per kept-key group, exactly as if each
+    * family ran its own call. Must be a subset of `keys`. */
   private[operators] def cappedBucketPairs(buckets: DataFrame, keys: Seq[String],
       tag: String, keep: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(keep.forall(keys.contains), s"keep ⊄ keys: $keep vs $keys")
     CapTelemetry.ensureListener(buckets.sparkSession)
-    val keyCols = keys.map(col)
-    val outCols = keep :+ "id_a" :+ "id_b"
-    // rank within bucket in doc_id order: rn_a < rn_b ⟺ id_a < id_b, and
-    // the window task is linear in bucket size (never quadratic)
-    val ranked = buckets.withColumn("rn",
-      row_number().over(Window.partitionBy(keyCols: _*).orderBy("doc_id")))
-    val dense = ranked.filter(col("rn") <= MaxBucket)
-    // dense-bucket pairs enumerate ROW-LOCALLY from one collected doc list
-    // per bucket (r16 continuation): the former dense⨝dense self-join
-    // planned the whole band lineage twice and re-sorted both sides; the
-    // groupBy here rides the window's existing hash partitioning (no new
-    // exchange), and per-group state is BOUNDED BY THE CAP (≤ MaxBucket
-    // ids), so the collect is safe at any scale — the unbounded-hub risk
-    // that forbids collecting raw buckets doesn't apply post-cap. ids are
-    // sorted ascending, so (ids[j], ids[i]) for j<i reproduces exactly the
-    // rn_a < rn_b ⟺ id_a < id_b pairs of the join form.
-    val denseIds = dense.groupBy(keyCols: _*)
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2) // sequence(1, 0) would DESCEND (gopher note)
-    val densePairs = denseIds
-      .select(keep.map(col) :+ explode(expr(
-        """flatten(transform(sequence(1, size(ids) - 1),
-          |  i -> transform(sequence(0, i - 1),
-          |    j -> struct(ids[j] AS id_a, ids[i] AS id_b))))"""
-          .stripMargin.replace("\n", " "))).as("p"): _*)
-      .select(keep.map(col) :+ col("p.id_a").as("id_a") :+ col("p.id_b").as("id_b"): _*)
-      .select(outCols.head, outCols.tail: _*)
-    val rep = ranked.filter(col("rn") === 1)
-      .select(keyCols :+ col("doc_id").as("id_a"): _*)
-    // telemetry rides the over-cap leg (its only consumer is the star
-    // join): each capped bucket has exactly one rn == cap+1 row, and the
-    // skipped enumerations are Σ(rn−2) over these rows — zero extra scan,
-    // zero shuffle, observable from any action that runs the build
-    // — except in a plan audit, which rebuilds each memo stage as fresh
-    // lineage, so a query reading the pair graph twice would carry two
-    // same-named observes, which Spark rejects (DUPLICATED_METRICS_NAME)
-    val overCap = ranked.filter(col("rn") > MaxBucket)
-    val tail = (if (StageMemo.isAuditing) overCap else overCap
+    val w = Window.partitionBy(keys.map(col): _*).orderBy("doc_id")
+    val ranked = buckets.select(keep.map(col) ++ Seq(col("doc_id"),
+      row_number().over(w).as("rn"),
+      first("doc_id").over(w).as("rep"),
+      collect_list("doc_id").over(w.rowsBetween(-(MaxBucket - 1), -1)).as("prev")): _*)
+    // telemetry rides the ranked rows: each capped bucket has exactly one
+    // rn == cap+1 row, and the skipped enumerations are Σ(rn−2) over the
+    // rows past the cap — zero extra scan, zero shuffle, observable from
+    // any action that runs the build — except in a plan audit, which
+    // rebuilds each memo stage as fresh lineage, so a query reading the
+    // pair graph twice would carry two same-named observes, which Spark
+    // rejects (DUPLICATED_METRICS_NAME)
+    val observed = if (StageMemo.isAuditing) ranked else ranked
       .observe(CapTelemetry.observeName(tag),
         sum(when(col("rn") === MaxBucket + 1, 1L).otherwise(0L)).as("capped_buckets"),
-        sum(col("rn") - 2).as("dropped_pairs")))
-      .select(keyCols :+ col("doc_id").as("id_b"): _*)
-    val starPairs = rep.join(tail, keys).select(outCols.head, outCols.tail: _*)
-    densePairs.unionAll(starPairs).distinct()
+        sum(when(col("rn") > MaxBucket, col("rn") - 2)).as("dropped_pairs"))
+    val partners = when(col("rn") <= MaxBucket, col("prev")).otherwise(array(col("rep")))
+    observed
+      .select(keep.map(col) ++ Seq(explode(partners).as("id_a"), col("doc_id").as("id_b")): _*)
+      .distinct()
   }
 
   private def bandPairs(bands: DataFrame): DataFrame =
@@ -1087,30 +1072,24 @@ object Dedup {
     * smallest-id rule keeps whichever mirror crawled first). On the
     * planted fixture the perturbed copy drops a word, so keep-best must
     * retain every ORIGINAL — pinned in the spec. Token counts come from
-    * one projection of the corpus (integers, oracle-exact); the argmax is
-    * a per-cluster window over cluster labels joined to that projection —
-    * both sides shuffle (id, small-int) pairs only, never text.
+    * ONE projection of the corpus (integers, oracle-exact), left-joined to
+    * the cluster labels; one window partitioned by the cluster (a doc in no
+    * cluster is its own group) ranks each group's copies by tokens, and
+    * the first is kept. The join shuffles (id, small-int) pairs only,
+    * never text.
     *
-    * 100 TB shape: identical to [[dedupKeepList]] plus one
-    * (doc_id → n_tokens) projection join; the per-cluster window
+    * 100 TB shape: one corpus read, one join and one window — the window
     * partitions by cluster_id (clusters are near-dup-sized, never
     * corpus-sized partitions). */
   def dedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
     val quality = corpusWithNearDups(spark, dir)
       .select(col("doc_id"), size(split(col("text"), " ")).cast("bigint").as("n_tokens"))
-    val clusters = dedupClusters(spark, dir)
     val w = Window.partitionBy("cluster_id").orderBy(col("n_tokens").desc, col("doc_id"))
-    val best = clusters.join(quality, "doc_id")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
-      .select(col("cluster_id"), col("doc_id").as("keep_id"))
-    quality.join(clusters, Seq("doc_id"), "left")
-      .join(best, Seq("cluster_id"), "left")
+    quality.join(dedupClusters(spark, dir), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
-        col("n_tokens"),
-        when(col("keep_id").isNull || col("keep_id") === col("doc_id"), 1L)
-          .otherwise(0L).as("keep"))
+        col("n_tokens"))
+      .withColumn("keep", (first("doc_id").over(w) === col("doc_id")).cast("bigint"))
       .orderBy("doc_id")
   }
 
@@ -2148,16 +2127,16 @@ object Dedup {
     *
     * Per round: `localCheckpoint` truncates the lineage (the plan would
     * otherwise grow joins-deep per round — quadratic driver-side planning
-    * cost and a guaranteed stall), and the previous label rides along so
-    * the convergence check is a filter over the materialized checkpoint,
-    * not another join. Non-convergence at `maxIters` THROWS: silently
-    * returning partially-propagated labels would merge-under — a wrong
-    * cluster_id is worse than a loud abort.
+    * cost and a guaranteed stall), and the count of changed labels rides
+    * that checkpoint's own job as an `Observation` (a fresh one per round),
+    * so convergence costs no second action and no join. Non-convergence at
+    * `maxIters` THROWS: silently returning partially-propagated labels
+    * would merge-under — a wrong cluster_id is worse than a loud abort.
     *
     * Returns the labels and the rounds the run took to converge — driver
-    * pacing visibility (VERDICT r16 #9): every round costs one
-    * localCheckpoint job + one count, so the fixture's round count IS the
-    * iteration budget a 100 TB run pays per clustering pass.
+    * pacing visibility (VERDICT r16 #9): every round is one checkpoint
+    * action, so the round count IS the iteration budget a 100 TB run pays
+    * per clustering pass.
     * `CcConvergenceSpec` pins it (≤ JumpAfter + O(log diameter)) so a
     * regression in the jumping step can't silently multiply driver
     * round-trips.
@@ -2183,12 +2162,14 @@ object Dedup {
               least(col("label"), coalesce(col("j_lbl"), col("label"))).as("label"),
               col("prev_label"))
         }
-      val updated = jumped
+      val changed = org.apache.spark.sql.Observation(s"cc_round_$i")
+      labels = jumped
+        .observe(changed, sum(when(col("label") =!= col("prev_label"), 1L).otherwise(0L)).as("n"))
         .localCheckpoint() // truncates lineage; superseded checkpoint blocks
                            // are reclaimed by the ContextCleaner on dereference
-      val changed = updated.filter(col("label") =!= col("prev_label")).count()
-      labels = updated.select("doc_id", "label")
-      converged = changed == 0
+        .select("doc_id", "label")
+      // sum over no rows is null: an empty graph has converged too
+      converged = Option(changed.get("n")).forall(_ == 0L)
       i += 1
     }
     if (!converged)
@@ -2497,12 +2478,11 @@ object Dedup {
   /** Declarative (un-memoized) form of [[rankedShingleToks]]. */
   private def rankedShingleToksPlan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = table(spark, dir, "documents")
-      .filter(size(split(col("text"), " ")) >= 3)
-      // the single-file fixture reads as ONE partition; spread the
-      // CPU-bound shingle explode across cores (same gotcha as
-      // corpusWithNearDups — tokenize was 6 s single-threaded at sf0.1)
-      .repartition(spark.sparkContext.defaultParallelism)
+    // the single-file fixture reads as ONE partition; spread the
+    // CPU-bound shingle explode across cores (same gotcha as
+    // corpusWithNearDups — tokenize was 6 s single-threaded at sf0.1)
+    val docs = spread(table(spark, dir, "documents")
+      .filter(size(split(col("text"), " ")) >= 3))
     val toks = docs.select(col("doc_id"),
       explode(array_distinct(shingles(col("text")))).as("tok"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Fixtures.table
+import graft.Fixtures.{spread, table}
 
 /** Similarity search over the `embeddings` table (`embedding: array<float>`).
   *
@@ -104,9 +104,8 @@ object Similarity {
     * once and the edge list is checkpointed once for its three consumers
     * (mutual both sides, in-degree). */
   def knnGraphMutual(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val e = table(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), col("label"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val e = spread(table(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"), col("label")))
       .withColumn("nrm", norm(col("embedding")))
       .localCheckpoint(false)
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"),
@@ -201,8 +200,7 @@ object Similarity {
       (col("vec_id") + 1000000L).as("vec_id"),
       transform(col("embedding"), x => (x.cast("double") + 0.01).cast("float")).as("embedding"),
       col("label"))
-    val e = base.select("vec_id", "embedding", "label").unionAll(perturbed)
-      .repartition(spark.sparkContext.defaultParallelism) // single-split input; spread the FP work
+    val e = spread(base.select("vec_id", "embedding", "label").unionAll(perturbed))
       .withColumn("nrm", norm(col("embedding")))
       .localCheckpoint(false) // norms computed once, reused on both join sides
     val a = e.select(col("label"), col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na"))
@@ -1653,8 +1651,7 @@ object Similarity {
     val perturbed = base.select(
       (col("vec_id") + 1000000L).as("vec_id"),
       transform(col("embedding"), x => (x.cast("double") + 0.01).cast("float")).as("embedding"))
-    val e = base.select("vec_id", "embedding").unionAll(perturbed)
-      .repartition(spark.sparkContext.defaultParallelism)
+    val e = spread(base.select("vec_id", "embedding").unionAll(perturbed))
     val cents = base.filter(col("vec_id") >= 100 && col("vec_id") < 100 + nCentroids)
       .select(col("vec_id").as("cell"), col("embedding").as("cv"))
     val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("cell"))

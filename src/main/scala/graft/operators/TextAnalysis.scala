@@ -4397,9 +4397,8 @@ object TextAnalysis {
     * bounded. collect_set order is partition-dependent; sort_array
     * canonicalizes before the slice, so output is deterministic. */
   def invertedIndex(spark: SparkSession, dir: String, cap: Int = 10): DataFrame = {
-    val docs = table(spark, dir, "documents")
-      .filter(size(split(col("text"), " ")) >= 3)
-      .repartition(spark.sparkContext.defaultParallelism)
+    val docs = graft.Fixtures.spread(table(spark, dir, "documents")
+      .filter(size(split(col("text"), " ")) >= 3))
     docs.select(col("doc_id"), explode(array_distinct(Dedup.shingles(col("text")))).as("term"))
       .groupBy("term")
       .agg(count(lit(1)).as("df"),

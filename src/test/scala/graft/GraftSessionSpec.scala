@@ -13,18 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * live in [[GraftSession.scoped]] rather than in caches keyed on an
   * identity hash (which can collide after GC and never evict). */
 class GraftSessionSpec extends AnyFunSuite {
-
-  /** `root`-relative paths of the .scala files under `root` whose code
-    * (line and doc comments stripped) matches `pattern`. */
-  private def codeMatches(root: String, pattern: String): Seq[String] = {
-    val base = Paths.get(root)
-    Files.walk(base).iterator().asScala.filter(_.toString.endsWith(".scala")).filter { p =>
-      val code = Files.readAllLines(p).asScala
-        .filterNot { l => val t = l.trim; t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") }
-        .mkString("\n")
-      pattern.r.findFirstIn(code).isDefined
-    }.map((p: Path) => base.relativize(p).toString.replace('\\', '/')).toSeq.sorted
-  }
+  import GraftSessionSpec.codeMatches
 
   test("static scan: GraftSession is the only session builder, no identity-hash cache keys") {
     val builders = Seq("src/main/scala", "src/test/scala")
@@ -58,5 +47,20 @@ class GraftSessionSpec extends AnyFunSuite {
     val deadline = System.nanoTime() + 10000000000L
     while (ref.get != null && System.nanoTime() < deadline) { System.gc(); Thread.sleep(50) }
     assert(ref.get == null, "a session with a scoped entry was never collected")
+  }
+}
+
+object GraftSessionSpec {
+
+  /** `root`-relative paths of the .scala files under `root` whose code
+    * (line and doc comments stripped) matches `pattern`. */
+  def codeMatches(root: String, pattern: String): Seq[String] = {
+    val base = Paths.get(root)
+    Files.walk(base).iterator().asScala.filter(_.toString.endsWith(".scala")).filter { p =>
+      val code = Files.readAllLines(p).asScala
+        .filterNot { l => val t = l.trim; t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") }
+        .mkString("\n")
+      pattern.r.findFirstIn(code).isDefined
+    }.map((p: Path) => base.relativize(p).toString.replace('\\', '/')).toSeq.sorted
   }
 }

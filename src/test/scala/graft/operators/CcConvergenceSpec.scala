@@ -4,11 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
+import graft.profile.FooterAggSpec.jobsOf
 
 /** CC FIXPOINT DRIVER-PACING GATE (VERDICT r16 #9): the min-label
   * propagation loop is an eager driver iteration — each round costs one
-  * localCheckpoint job + one count (the per-round checkpoint cadence that
-  * keeps plan depth bounded, pinned by OperatorSpec's plan-depth test).
+  * localCheckpoint action, which also carries the changed-label count (the
+  * per-round checkpoint cadence that keeps plan depth bounded, pinned by
+  * OperatorSpec's plan-depth test; the jobs per round are pinned here).
   * At 100 TB the round COUNT is therefore the driver-pacing budget of a
   * clustering pass. This spec pins it on the REAL fixture graph: the
   * near-dup pair graph's components are shallow (handfuls of documents),
@@ -21,6 +23,8 @@ import graft.SparkSuite
   */
 class CcConvergenceSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
+  private val JumpAfterRounds = 4
+  private val PlainRoundJobs = 6
 
   test("fixture near-dup graph converges within the shallow-graph round budget") {
     StageMemo.clear() // the pair graph below is built fresh, not read from a memo
@@ -33,6 +37,24 @@ class CcConvergenceSpec extends AnyFunSuite {
     assert(rounds >= 1 && rounds <= 8,
       s"CC fixpoint took $rounds rounds on the fixture — driver pacing regressed")
     StageMemo.clear() // leave no memoized stage bound to this spec's run
+  }
+
+  test("each round is one checkpoint action: the changed-label count rides its job") {
+    StageMemo.clear()
+    val (edges, seed) = Dedup.nearDupGraph(spark, SparkSuite.Sf001)
+    edges.count() // the pair graph's own build runs outside the measured groups
+    val (_, seedJobs) = jobsOf(spark, "cc_seed")(seed.localCheckpoint())
+    val ((_, rounds), jobs) = jobsOf(spark, "cc_rounds") {
+      Dedup.propagateMinLabels(edges, seed, maxIters = 20)
+    }
+    // the fixture converges before JumpAfter, so every round is a plain
+    // one: its checkpoint's AQE stage jobs and nothing else. Measured: 11
+    // jobs over 2 rounds beyond the seed's own checkpoint; a separate
+    // count of changed labels added 2 jobs per round (15)
+    assert(rounds < JumpAfterRounds)
+    assert(jobs - seedJobs <= PlainRoundJobs * rounds,
+      s"${jobs - seedJobs} jobs for $rounds rounds — a round runs more than its checkpoint action")
+    StageMemo.clear()
   }
 
   test("round budget scales as O(log diameter) past JumpAfter, not O(diameter)") {
