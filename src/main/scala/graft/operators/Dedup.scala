@@ -140,10 +140,6 @@ object Dedup {
   private def memoStage(spark: SparkSession, dir: String, stage: String)(
       build: => DataFrame): DataFrame = StageMemo(spark, dir, stage)(build)
 
-  /** Test/bench hook — clears EVERY memoized stage (near-dup AND span
-    * family), kept here because Bench and the leak specs reach it. */
-  private[graft] def clearSharedStages(): Unit = StageMemo.clear()
-
   /** Stage 1 — (doc_id, sig): the native one-pass MinHash signature per
     * doc, materialized once per (session, dir). DELIBERATELY narrow: an
     * earlier form also checkpointed the distinct shingle SETS, but those
@@ -2464,15 +2460,11 @@ object Dedup {
     * (doc_id, tok, rn, sz) with rn = the token's rank in the doc under the
     * global rarest-first order and sz = the doc's distinct-shingle count.
     * ONE tokenize pass feeds everything: rank + doc size ride the same
-    * per-doc window, and the lazy localCheckpoint stops the downstream
+    * per-doc window, and the memo's checkpoint stops the downstream
     * consumers (prefix sides, verify sides) from re-exploding the corpus
-    * (measured 2x end-to-end at sf0.1); lazy so plan-only consumers
-    * (PlansDump) still build without running a job. */
+    * (measured 2x end-to-end at sf0.1). Memoized per (session, dir), so
+    * the Jaccard and containment joins share one tokenize + rank. */
   private[operators] def rankedShingleToks(spark: SparkSession, dir: String): DataFrame =
-    // memoized per (session, dir) so the Jaccard and containment joins —
-    // and back-to-back bench reps — share ONE tokenize+rank+checkpoint;
-    // the checkpoint inside stays LAZY, so memo construction runs no job
-    // and PlansDump still builds both join plans job-free
     memoStage(spark, dir, "ranked_toks") { rankedShingleToksPlan(spark, dir) }
 
   /** Declarative (un-memoized) form of [[rankedShingleToks]]. */
@@ -2491,7 +2483,6 @@ object Dedup {
       .select(col("doc_id"), col("tok"),
         row_number().over(wDoc).as("rn"),
         count(lit(1)).over(Window.partitionBy("doc_id")).as("sz"))
-      .localCheckpoint(false)
   }
 
   /** EXACT containment-threshold join — the ASYMMETRIC twin of

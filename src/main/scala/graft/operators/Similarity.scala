@@ -104,21 +104,19 @@ object Similarity {
     * once and the edge list is checkpointed once for its three consumers
     * (mutual both sides, in-degree). */
   def knnGraphMutual(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val e = spread(table(spark, dir, "embeddings")
+    val e = StageMemo.shared(spread(table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label")))
-      .withColumn("nrm", norm(col("embedding")))
-      .localCheckpoint(false)
+      .withColumn("nrm", norm(col("embedding"))))
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"),
       col("nrm").as("na"))
     val b = e.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
       col("nrm").as("nb"))
     val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    val edges = a.join(b, col("id_a") =!= col("id_b"))
+    val edges = StageMemo.shared(a.join(b, col("id_a") =!= col("id_b"))
       .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
-      .select("id_a", "id_b")
-      .localCheckpoint(false)
+      .select("id_a", "id_b"))
     val mut = edges.as("x")
       .join(edges.as("y"),
         col("x.id_a") === col("y.id_b") && col("x.id_b") === col("y.id_a"), "left_semi")
@@ -200,9 +198,9 @@ object Similarity {
       (col("vec_id") + 1000000L).as("vec_id"),
       transform(col("embedding"), x => (x.cast("double") + 0.01).cast("float")).as("embedding"),
       col("label"))
-    val e = spread(base.select("vec_id", "embedding", "label").unionAll(perturbed))
-      .withColumn("nrm", norm(col("embedding")))
-      .localCheckpoint(false) // norms computed once, reused on both join sides
+    // norms computed once, reused on both join sides
+    val e = StageMemo.shared(spread(base.select("vec_id", "embedding", "label").unionAll(perturbed))
+      .withColumn("nrm", norm(col("embedding"))))
     val a = e.select(col("label"), col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na"))
     val b = e.select(col("label"), col("vec_id").as("id_b"), col("embedding").as("vb"), col("nrm").as("nb"))
     a.join(b, Seq("label"))

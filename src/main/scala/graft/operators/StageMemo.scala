@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Process-level memo of materialized pipeline stages, keyed by
@@ -232,5 +234,5 @@ private[graft] object StageMemo {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
     }
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 }

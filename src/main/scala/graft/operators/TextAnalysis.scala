@@ -2076,9 +2076,9 @@ object TextAnalysis {
         sum(when(col(a) && !col(b), 1L).otherwise(0L)).as(s"${a}_${b}_oa"),
         sum(when(!col(a) && col(b), 1L).otherwise(0L)).as(s"${a}_${b}_ob"))
     }
-    val one = filterFlags(spark, dir)
-      .agg(count(lit(1)).as("n_docs"), aggs: _*)
-      .localCheckpoint(false) // 1 row; its 6 consumers must not refold the corpus
+    // 1 row; its 6 consumers must not refold the corpus
+    val one = StageMemo.shared(filterFlags(spark, dir)
+      .agg(count(lit(1)).as("n_docs"), aggs: _*))
     filterPairs.map { case (a, b) =>
       one.select(lit(a).as("filter_a"), lit(b).as("filter_b"), col("n_docs"),
         col(s"${a}_${b}_bk").as("both_keep"), col(s"${a}_${b}_bd").as("both_drop"),
@@ -2307,12 +2307,11 @@ object TextAnalysis {
     // double-scan docTermTf's localCheckpoint exists to avoid (ADVICE r7).
     // The rollup (distinct words per doc) is strictly smaller than the raw
     // token stream, so this is also the cheaper artifact to materialize.
-    val tf = table(spark, dir, "documents")
+    val tf = StageMemo.shared(table(spark, dir, "documents")
       .select(col("doc_id"), explode(words).as("word"))
       .filter(col("word") =!= "")
       .groupBy("doc_id", "word")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("tf")))
     // rollup rows are unique per (doc, word), so count(*) IS the df
     val vocab = tf
       .groupBy("word").agg(count(lit(1)).as("df"))

@@ -21,7 +21,7 @@ class BenchContractSpec extends AnyFunSuite {
   private val jvmJson =
     """"jvm":{"code_cache_used_mb":511,"code_cache_max_mb":512,"gc_sec":1234.567}"""
   private val line = Bench.compactTotalLine(
-    272.912, results, errors, loadJson, jvmJson, dataWarm = true,
+    272.912, results, errors, loadJson, jvmJson,
     "/root/testdata/sf0.1")
 
   test("final line is valid standalone JSON") {
@@ -64,7 +64,7 @@ class BenchContractSpec extends AnyFunSuite {
   test("realistic name lengths carry at least 25 per-query entries") {
     val typical = (1 to 387).map(i => (f"dedup_banding_curve_$i%03d", i * 0.31))
     val l = Bench.compactTotalLine(272.912, typical, Seq.empty, loadJson,
-      jvmJson, dataWarm = true, "/root/testdata/sf0.1")
+      jvmJson, "/root/testdata/sf0.1")
     val node = mapper.readTree(l)
     assert(node.get("queries").size() >= 25, s"only ${node.get("queries").size()} entries: $l")
     assert(l.getBytes("UTF-8").length <= 1800)
@@ -72,15 +72,5 @@ class BenchContractSpec extends AnyFunSuite {
 
   test("single line, no embedded newlines") {
     assert(!line.contains("\n"))
-  }
-
-  test("fresh-JVM adjudication fork measures a real query end-to-end") {
-    // the VERDICT r10 #2 path: a forked TimeQuery JVM with inherited flags
-    // and its own warehouse dir. A broken classpath/fork would return -1 and
-    // Bench would silently ship in-session (possibly degraded) numbers —
-    // so the fork itself is gated here. ~40 s: one JVM + Spark startup.
-    val t = Bench.freshJvmMin("profile_rowcounts", SparkSuite.Sf0001)
-    assert(t > 0, "fresh-JVM fork failed (classpath or TimeQuery regression)")
-    assert(t < 120, s"fresh-JVM rep implausibly slow: $t s")
   }
 }

@@ -94,7 +94,7 @@ class ExtendedOperatorSpec extends AnyFunSuite {
     // managed), never Dataset.persist caches — so running the whole family
     // must leave the CacheManager exactly as empty as it started
     spark.sharedState.cacheManager.clearCache()
-    Dedup.clearSharedStages()
+    StageMemo.clear()
     Dedup.minhashJaccardEstimate(spark, dir).collect()
     Dedup.nearDupTriangles(spark, dir).collect()
     Dedup.minhashCandidatePairs(spark, dir).collect()

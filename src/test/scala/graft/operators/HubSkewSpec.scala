@@ -68,7 +68,7 @@ class HubSkewSpec extends AnyFunSuite {
   }
 
   test("a 2000-copy template hub yields linear pair volume and bounded task skew") {
-    Dedup.clearSharedStages()
+    StageMemo.clear()
     val stats = new GroupTaskStats("hub_skew_build")
     spark.sparkContext.addSparkListener(stats)
     spark.sparkContext.setJobGroup("hub_skew_build", "hub skew stress")
@@ -123,7 +123,7 @@ class HubSkewSpec extends AnyFunSuite {
     assert(droppedPairs > 10000000L,
       s"dropped_pairs = $droppedPairs — the 2000-copy hub should skip ~2M enumerations per bucket")
     // and an organic corpus (sf0.001, largest bucket << cap) reports ZERO
-    Dedup.clearSharedStages()
+    StageMemo.clear()
     Dedup.minhashCandidatePairs(spark, SparkSuite.Sf0001).count()
     assert(Dedup.CapTelemetry.last("minhash_bands").contains((0L, 0L)),
       s"organic corpus reported ${Dedup.CapTelemetry.last("minhash_bands")} — expected (0, 0)")

@@ -20,6 +20,10 @@ class StageMemoAuditSpec extends AnyFunSuite {
   private val memoReaders = Seq(
     "dedup_minhash_pairs" -> "candidates",
     "profile_catalog_long" -> "catalog_profile")
+  // queries whose in-query shared frames go through StageMemo.shared
+  // (embedding_near_dups: inside its memoized pair build)
+  private val sharedFrameReaders = Seq(
+    "embedding_knn_mutual", "docs_filter_agreement", "text_oov_rate", "embedding_near_dups")
 
   /** Checkpoint reads in the analyzed (logical) and executed plans. */
   private def checkpointLeaves(df: DataFrame): Int =
@@ -27,7 +31,7 @@ class StageMemoAuditSpec extends AnyFunSuite {
       df.queryExecution.executedPlan.collectLeaves().count(_.isInstanceOf[RDDScanExec])
 
   test("under audit, memo readers plan their full lineage and record nothing") {
-    memoReaders.foreach { case (name, _) =>
+    (memoReaders.map(_._1) ++ sharedFrameReaders).foreach { name =>
       StageMemo.releaseAll()
       StageMemo.resetRebuildTracking()
       StageMemo.beginQuery(s"audit_spec_$name")

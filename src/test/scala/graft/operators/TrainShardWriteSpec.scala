@@ -53,7 +53,7 @@ class TrainShardWriteSpec extends AnyFunSuite {
     // rerun determinism: a second write (fresh manifest build — the memo
     // is cleared — and an overwrite-mode write) must produce bit-identical
     // content, or resumed/repeated production runs silently diverge
-    Dedup.clearSharedStages()
+    StageMemo.clear()
     val out2 = TextAnalysis.shardWrite(spark, dir)
     assert(out2 == out)
     assert(snapshot(out2) == rows, "rerun produced different shard content")

@@ -8,8 +8,8 @@
 # in the same hour — this script cans that: it checks out a previous
 # round's commit into a throwaway shared clone, runs its Bench against the
 # same SF dir with the same env, and saves its one-line full artifact as
-# the crosscheck file, then (optionally) prints the bench_compare ratio
-# against a current artifact.
+# the crosscheck file, then (optionally) prints the graft.cli.BenchDiff
+# report against a current artifact.
 #
 # Usage: tools/bench_ab.sh <old-ref> <out-json> [sfDir] [current-full.json]
 #
@@ -23,11 +23,12 @@ OUT=${2:?usage: bench_ab.sh <old-ref> <out-json> [sfDir] [current-full.json]}
 SF=${3:-/root/testdata/sf0.1}
 CUR=${4:-}
 
-SHORT=$(git -C /root/repo rev-parse --short "$REF")
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+SHORT=$(git -C "$ROOT" rev-parse --short "$REF")
 WORK=/tmp/graft_ab_${SHORT}
 
 if [ ! -d "$WORK" ]; then
-  git clone -q --shared /root/repo "$WORK"
+  git clone -q --shared "$ROOT" "$WORK"
 fi
 git -C "$WORK" checkout -q --detach "$SHORT"
 
@@ -47,5 +48,5 @@ print(f"[bench_ab] old-code total {d['value']:.1f} s / {d['n_queries']} queries,
 EOF
 
 if [ -n "$CUR" ]; then
-  python3 /root/repo/tools/bench_compare.py "$OUT" "$CUR"
+  (cd "$ROOT" && sbt -batch "runMain graft.cli.BenchDiff $(realpath "$OUT") $(realpath "$CUR")")
 fi
