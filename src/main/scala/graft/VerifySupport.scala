@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for [[Verify]] (the driver's full correctness dump) and
@@ -78,7 +80,7 @@ object VerifySupport {
           s"driver-facing query emits non-atomic columns [${complex.mkString("; ")}] — " +
             "project a scalar digest/exploded rows instead (round-3 lesson)")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

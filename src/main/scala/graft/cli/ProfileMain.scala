@@ -1,5 +1,7 @@
 package graft.cli
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
@@ -46,7 +48,7 @@ object ProfileMain {
       val spark = GraftSession.local(threads)
       try print(run(spark, data, args)) finally spark.stop()
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"Failed to list tables: ${e.getMessage}")
         sys.exit(1)
     }

@@ -30,7 +30,8 @@ import graft.Fixtures.table
   *
   * 100 TB shape: ONE corpus-sized shuffle — the (doc, bucket) feature-count
   * aggregate (map-side combined; the "featurize once" artifact, shared by
-  * the model fit and the scoring side via a lazy localCheckpoint). The two
+  * the model fit and the scoring side as the `dsir_feats` StageMemo
+  * stage). The two
   * models reduce to [[NumBuckets]] rows (constant, broadcast back for
   * scoring — never a second corpus shuffle), and selection windows are
   * per-SOURCE (never a global rank), so each stratum ranks independently

@@ -132,13 +132,7 @@ object Dedup {
     array_min(transform(sh, s => md5(concat(lit(s"$i|"), s))))
 
   // --------------------------------------- shared materialized pipeline
-  /** The near-dup family — candidate pairs, verified pairs, Jaccard
-    * estimation, triangles, three clustering forms — all consume the same
-    * shingle → minhash → band → verify pipeline, memoized via
-    * [[StageMemo]] (materialized once per (session, dir); recomputing it
-    * per query was the slowest block of the round-4/5 bench). */
-  private def memoStage(spark: SparkSession, dir: String, stage: String)(
-      build: => DataFrame): DataFrame = StageMemo(spark, dir, stage)(build)
+  // the near-dup family's shingle → minhash → band → verify stages (StageMemo)
 
   /** Stage 1 — (doc_id, sig): the native one-pass MinHash signature per
     * doc, materialized once per (session, dir). DELIBERATELY narrow: an
@@ -148,7 +142,7 @@ object Dedup {
     * one extra scan their two consumers pay — signatures are 8 md5 strings
     * per doc, a few hundred bytes. */
   private[operators] def sharedSignatures(spark: SparkSession, dir: String): DataFrame =
-    memoStage(spark, dir, "signatures") {
+    StageMemo(spark, dir, "signatures") {
       corpusWithNearDups(spark, dir)
         .filter(hasShingles(col("text")))
         // native one-pass signature (bit-equal to the minhashHof columns —
@@ -337,7 +331,7 @@ object Dedup {
     * Materialized: consumed by the gated candidates query, the verify
     * stage, and the Jaccard estimator. */
   private[operators] def sharedCandidatePairs(spark: SparkSession, dir: String): DataFrame =
-    memoStage(spark, dir, "candidates") {
+    StageMemo(spark, dir, "candidates") {
       bandPairs(bandsFromSig(sharedSignatures(spark, dir)))
     }
 
@@ -349,13 +343,13 @@ object Dedup {
     * the derive-per-side alternative ran the corpus scan + shingling
     * twice inside a single timed query. */
   private[operators] def sharedScoredCandidates(spark: SparkSession, dir: String): DataFrame =
-    memoStage(spark, dir, "scored")(scoredCandidatesBuild(spark, dir))
+    StageMemo(spark, dir, "scored")(scoredCandidatesBuild(spark, dir))
 
   /** Un-memoized builder of the scored stage. */
   private def scoredCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
-    val docs = shingleSets(spark, dir)
-      .join(sharedSignatures(spark, dir), "doc_id")
-      .localCheckpoint(true) // transient; ContextCleaner frees the blocks
+    // eager: AQE picks the joins' broadcast side from its materialized size
+    val docs = StageMemo.truncate(shingleSets(spark, dir)
+      .join(sharedSignatures(spark, dir), "doc_id"))
     sharedCandidatePairs(spark, dir)
       .join(docs.select(col("doc_id").as("id_a"), col("shd").as("sh_a"), col("sig").as("sig_a")), "id_a")
       .join(docs.select(col("doc_id").as("id_b"), col("shd").as("sh_b"), col("sig").as("sig_b")), "id_b")
@@ -522,13 +516,13 @@ object Dedup {
     // memoized: the 4-row curve is read twice per session (the curve query
     // and [[bandingPick]]) — without the memo the pick re-pays the whole
     // banded self-join sweep (~7 s at sf0.1 bench scale, round 12)
-    memoStage(spark, dir, "banding_curve")(bandingCurveBuild(spark, dir))
+    StageMemo(spark, dir, "banding_curve")(bandingCurveBuild(spark, dir))
       .orderBy("band_size")
 
   private[operators] def bandingCurveBuild(spark: SparkSession, dir: String): DataFrame = {
     val configs = Seq((8, 1), (4, 2), (2, 4), (1, 8)) // (n_bands, band_size)
     val sig = sharedSignatures(spark, dir)
-    val sets = memoStage(spark, dir, "curve_sets")(shingleSets(spark, dir))
+    val sets = StageMemo(spark, dir, "curve_sets")(shingleSets(spark, dir))
     // ALL configs' bands in one explode, the config id folded into the
     // bucket key: one window, one pair join, one distinct for the whole
     // sweep instead of four (per-config caps and per-config pair dedup are
@@ -716,7 +710,7 @@ object Dedup {
   def dedupKeepList(spark: SparkSession, dir: String): DataFrame =
     // memoized (r16): read by four declared queries (keep list, impact,
     // weights, quality bias) — (doc_id, cluster_id, keep) is 3 longs/row
-    memoStage(spark, dir, "keep_list") {
+    StageMemo(spark, dir, "keep_list") {
       val corpus = corpusWithNearDups(spark, dir).select("doc_id")
       val clusters = dedupClusters(spark, dir)
       val keepers = clusters.groupBy("cluster_id").agg(min("doc_id").as("keep_id"))
@@ -1167,9 +1161,9 @@ object Dedup {
     * materialized stage. */
   def pagerankHubs(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
     val pairs = sharedVerifiedPairs(spark, dir).select("id_a", "id_b")
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(true) // reused every round; truncates lineage growth
+    // reused every round; the cut stops lineage growth
+    val edges = StageMemo.truncate(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     var rank = deg.select(col("src").as("doc_id"), lit(1000000L).as("pr"))
     (0 until iters).foreach { _ =>
@@ -1728,7 +1722,7 @@ object Dedup {
     // signature table materialized once per (session, dir, bits, mod):
     // it feeds both join sides, and a CacheManager persist here would
     // leak into later queries (same class as the minhash-family leak)
-    val sig = memoStage(spark, dir, s"simhash_${bits}_$mod") {
+    val sig = StageMemo(spark, dir, s"simhash_${bits}_$mod") {
       simhashTable(spark, dir, bits, mod)
     }
     val probes = sig.select(col("doc_id"),
@@ -2064,7 +2058,7 @@ object Dedup {
     // of two longs; build once per (session, dir), release after the last
     // consumer. This is also the production shape: cluster once, answer
     // every downstream question from the label table.
-    val labels = memoStage(spark, dir, s"cc_labels_$maxIters") {
+    val labels = StageMemo(spark, dir, s"cc_labels_$maxIters") {
       val (edges, seed) = nearDupGraph(spark, dir)
       propagateMinLabels(edges, seed, maxIters)._1
     }
@@ -2121,7 +2115,7 @@ object Dedup {
     * Both steps only ever replace a label with a smaller label from the
     * same component, so the fixpoint is exactly the per-component minimum.
     *
-    * Per round: `localCheckpoint` truncates the lineage (the plan would
+    * Per round: [[StageMemo.truncate]] cuts the lineage (the plan would
     * otherwise grow joins-deep per round — quadratic driver-side planning
     * cost and a guaranteed stall), and the count of changed labels rides
     * that checkpoint's own job as an `Observation` (a fresh one per round),
@@ -2139,7 +2133,7 @@ object Dedup {
     */
   private[operators] def propagateMinLabels(
       edges: DataFrame, seed: DataFrame, maxIters: Int): (DataFrame, Int) = {
-    var labels = seed.localCheckpoint()
+    var labels = StageMemo.truncate(seed)
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
@@ -2159,11 +2153,10 @@ object Dedup {
               col("prev_label"))
         }
       val changed = org.apache.spark.sql.Observation(s"cc_round_$i")
-      labels = jumped
+      // superseded cuts are reclaimed by the ContextCleaner on dereference
+      labels = StageMemo.truncate(jumped
         .observe(changed, sum(when(col("label") =!= col("prev_label"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint() // truncates lineage; superseded checkpoint blocks
-                           // are reclaimed by the ContextCleaner on dereference
-        .select("doc_id", "label")
+        .select("doc_id", "label"))
       // sum over no rows is null: an empty graph has converged too
       converged = Option(changed.get("n")).forall(_ == 0L)
       i += 1
@@ -2212,10 +2205,10 @@ object Dedup {
     * distinct undirected edges; returns (doc_id, cluster_id) for every
     * node incident to an edge. */
   private[operators] def starComponents(pairs: DataFrame, maxIters: Int): DataFrame = {
-    var edges = pairs.filter(col("id_a") =!= col("id_b"))
+    var edges = StageMemo.truncate(pairs.filter(col("id_a") =!= col("id_b"))
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
-      .distinct().localCheckpoint()
+      .distinct())
     // count + XOR of 64-bit edge hashes: order-independent, cannot overflow
     // (sum would trip ANSI long-overflow on large edge sets), distinct edges
     // so XOR self-cancellation can't hide a change of a single edge.
@@ -2245,10 +2238,10 @@ object Dedup {
       val joined = afterLarge
         .join(mins2, afterLarge("b") === mins2("u"))
         .select(col("a").as("v"), col("m"), col("u"))
-      val next = joined.filter(col("v") =!= col("m"))
+      val next = StageMemo.truncate(joined.filter(col("v") =!= col("m"))
         .select(col("m").as("a"), col("v").as("b"))
         .unionAll(joined.select(col("m").as("a"), col("u").as("b")))
-        .distinct().localCheckpoint()
+        .distinct())
       val nextSig = signature(next)
       done = nextSig == sig
       sig = nextSig
@@ -2304,8 +2297,8 @@ object Dedup {
     // the edge view must be MATERIALIZED before the recursion: the
     // recursive step joins it once per iteration, and an unmaterialized
     // view would re-run the whole minhash→band→jaccard pipeline each round
-    // (measured 15.5 s vs ~2 s at sf0.1). sharedVerifiedPairs is already
-    // localCheckpointed, so the view reads existing blocks.
+    // (measured 15.5 s vs ~2 s at sf0.1). sharedVerifiedPairs is a
+    // StageMemo stage, so the view reads existing blocks.
     sharedVerifiedPairs(spark, dir).select("id_a", "id_b")
       .createOrReplaceTempView("dedup_pairs")
     spark.sql(
@@ -2465,7 +2458,7 @@ object Dedup {
     * (measured 2x end-to-end at sf0.1). Memoized per (session, dir), so
     * the Jaccard and containment joins share one tokenize + rank. */
   private[operators] def rankedShingleToks(spark: SparkSession, dir: String): DataFrame =
-    memoStage(spark, dir, "ranked_toks") { rankedShingleToksPlan(spark, dir) }
+    StageMemo(spark, dir, "ranked_toks") { rankedShingleToksPlan(spark, dir) }
 
   /** Declarative (un-memoized) form of [[rankedShingleToks]]. */
   private def rankedShingleToksPlan(spark: SparkSession, dir: String): DataFrame = {
@@ -2573,11 +2566,11 @@ object Dedup {
     * neighbors leave), so the fixpoint IS the unique maximal subgraph of
     * min-degree ≥ k. Batch removal converges in few rounds on real graphs
     * (each round strictly shrinks the edge set or terminates); lineage is
-    * cut per round with localCheckpoint, the connected-components recipe.
+    * cut per round by [[StageMemo.truncate]] (the connected-components way).
     * Edge-count stability is the exact fixpoint test: any removed node
     * carried ≥ 1 edge, so "no edges lost" ⟺ "nothing removed". */
   def kCoreOf(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
-    var cur = edges.select("id_a", "id_b").localCheckpoint()
+    var cur = StageMemo.truncate(edges.select("id_a", "id_b"))
     var n = cur.count()
     var prev = -1L
     var rounds = 0
@@ -2587,10 +2580,9 @@ object Dedup {
         .groupBy("id").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("id")
-      cur = cur
+      cur = StageMemo.truncate(cur
         .join(keep, cur("id_a") === keep("id"), "left_semi")
-        .join(keep, cur("id_b") === keep("id"), "left_semi")
-        .localCheckpoint()
+        .join(keep, cur("id_b") === keep("id"), "left_semi"))
       prev = n
       n = cur.count()
       rounds += 1
@@ -2614,7 +2606,7 @@ object Dedup {
     * contained in the 2-core, and peeling is confluent). KCoreSpec pins
     * from-2-core ≡ from-scratch on planted graphs. */
   private def sharedKCore(spark: SparkSession, dir: String, k: Int): DataFrame =
-    memoStage(spark, dir, s"kcore_$k") {
+    StageMemo(spark, dir, s"kcore_$k") {
       if (k <= 2) kCoreOf(sharedVerifiedPairs(spark, dir).select("id_a", "id_b"), k)
       else kCoreOf(sharedKCore(spark, dir, k - 1), k)
     }

@@ -2103,7 +2103,7 @@ object EventOps {
     // plan branches, and Spark has no cross-branch CSE — the scan, the
     // per-user windows and the session aggregate all ran TWICE (plan:
     // 2 parquet scans). The change-point frame is then materialized once
-    // (lazy localCheckpoint, distinct-timestamp-bounded rows) because the
+    // (StageMemo.shared, distinct-timestamp-bounded rows) because the
     // bucket-offset branch and the sweep branch both read it.
     val deltas0 = sessions.select(explode(array(
         struct(col("s_tus").as("tus"), lit(1L).as("d")),

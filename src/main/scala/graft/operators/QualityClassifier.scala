@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle instead of diverging in `ln` ulps.
   *
   * 100 TB shape: the corpus shuffles ONCE into the (doc, word) tf frame
-  * (shared via lazy localCheckpoint across the bucket fit, the class-count
+  * (shared as the `nb_docterm` StageMemo stage across the bucket fit, the class-count
   * fit, and scoring); class counts reduce to a VOCAB-sized table (Zipf-
   * bounded) that scoring joins back on `word` — a vocab-keyed shuffle join,
   * never a broadcast of something corpus-sized and never a second corpus

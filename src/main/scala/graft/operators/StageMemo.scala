@@ -2,71 +2,61 @@ package graft.operators
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Union
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Process-level memo of materialized pipeline stages, keyed by
-  * (SparkContext identity, data dir, stage name) — shared by the near-dup
-  * family (signatures → candidates → scored pairs) and the span family
-  * (duplicated 5-grams).
-  *
-  * Stages run ONCE per (session, dir) and are materialized with
-  * `localCheckpoint(eager = true)` — RDD blocks, released by the
-  * ContextCleaner when unreferenced, never registered in the CacheManager
-  * (the per-query `Dataset.persist()` alternative leaked cached blocks
-  * into every later query of the process — ADVICE r5 #1). This is also
-  * the 100 TB shape: materialize the derived artifact once and run every
-  * downstream analytic against it, rather than re-hashing the corpus per
-  * question.
+/** The engine's one materialization policy. A memo of materialized
+  * pipeline stages, keyed by (SparkContext identity, data dir, stage name),
+  * built ONCE per (session, dir): [[apply]]. A lazy in-query frame several
+  * branches read: [[shared]]. An eager lineage cut in a driver loop or a
+  * build: [[truncate]]. Each is a local checkpoint — RDD blocks, freed by
+  * the ContextCleaner when unreferenced, never registered in the
+  * CacheManager (a per-query `persist()` leaked cached blocks into every
+  * later query — ADVICE r5 #1). This is the 100 TB shape: materialize the
+  * derived artifact once and answer every question from it. A stage build
+  * that already ends in cuts (a loop's last [[truncate]], or a union of
+  * them) is kept as it is rather than written a second time.
   *
   * ==Bounded residency (VERDICT r14 #1)==
-  * GC-managed release turned out not to bound anything in practice: the
-  * memo itself holds the strong reference for process lifetime, and even
-  * after [[clear]] the ContextCleaner only frees blocks after a full GC
-  * enqueues the weak refs (its own periodic GC defaults to 30 min — longer
-  * than a whole bench run). Round 14 measured the cost: the LM family's
-  * new memoized stages stayed resident across the remaining ~300 bench
-  * queries, tripled JVM GC time, and taxed every later family ~16%. So the
-  * memo now supports EXPLICIT release: [[beginQuery]] attributes reads to
-  * the declared query names, [[lastReaders]] derives each stage's final
-  * consumer from an observed run order, and [[release]] / [[releaseAll]]
-  * drop entries AND eagerly unpersist their checkpoint blocks (safe: a
-  * released stage simply rebuilds for any later consumer — same contract
-  * as a fresh session). Bench releases each stage right after its last
-  * consumer's timed run; steady-state memory is then one family's working
-  * set, not the whole suite's history.
+  * The memo holds its stages for process lifetime, and the ContextCleaner
+  * frees blocks only after a full GC (round 14: the LM family's stages
+  * stayed resident across ~300 later bench queries, tripled GC time and
+  * taxed every later family ~16%). So release is EXPLICIT: [[beginQuery]]
+  * attributes reads to the declared queries, [[lastReaders]] derives each
+  * stage's final consumer from a run order, and [[releaseAfter]] /
+  * [[releaseAll]] drop entries AND unpersist their blocks now (a released
+  * stage rebuilds for any later consumer, as in a fresh session).
   *
   * ==Immutable-dir contract==
-  * A memoized stage is pinned to the FILES AS READ at build time: if data
-  * under `dir` is rewritten or appended mid-session, every consumer of the
-  * stage silently serves results for the old files. That is deliberate —
-  * the fixture dirs are driver-generated snapshots and a production corpus
-  * version is an immutable path (new snapshot ⇒ new dir ⇒ new key). Point
-  * each corpus VERSION at its own directory; never rewrite one in place.
+  * A memoized stage is pinned to the FILES AS READ at build time: data
+  * rewritten under `dir` mid-session is not seen. Deliberate: a corpus
+  * version is an immutable path (new snapshot ⇒ new dir ⇒ new key).
   * ([[clear]] resets the memo when a test must re-read a mutated dir.)
   *
   * ==Plan audits==
-  * A frame read from the memo (or from an in-query [[shared]] frame) shows
-  * up in explain output as a checkpoint scan, which hides the lineage a
-  * plan audit exists to read. Inside [[audit]] every stage and shared frame
-  * is its un-materialized build instead, so the audited plan of a query is
-  * the full pipeline its materializations run. The scope belongs to the
-  * calling thread (and threads started inside it), records nothing (no
-  * memo entry, no reader, no rebuild) and is entered only by the plan
-  * dumps (`PlansDump`, `PlanFiles`) and specs; outside it every call
-  * behaves exactly as described above.
+  * A memo or [[shared]] frame explains as a checkpoint scan, which hides
+  * the lineage a plan audit exists to read. Inside [[audit]] every stage
+  * and shared frame is its un-materialized build instead. The scope
+  * belongs to the calling thread (and threads started inside it), records
+  * nothing (no memo entry, reader or rebuild) and is entered only by the
+  * plan dumps (`PlansDump`, `PlanFiles`) and specs.
   */
 private[graft] object StageMemo {
 
-  /** One lock object per key: a stage build runs an EAGER Spark job
-    * (localCheckpoint), so a global lock would serialize unrelated stage
-    * builds behind it — e.g. the span family's gram-frequency build
-    * blocking the near-dup family's signature build (ADVICE r6). The
-    * per-key lock still guarantees each stage builds exactly once. */
+  /** One lock per key: a global lock would serialize unrelated stage
+    * builds (each an eager Spark job) behind each other (ADVICE r6); the
+    * per-key lock still builds each stage exactly once. */
   private val stageCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), Memo]
 
-  private final class Memo(build: () => DataFrame) {
-    lazy val df: DataFrame = build() // lazy val = per-instance (per-key) lock
+  private final class Memo(build: () => (DataFrame, Seq[RDD[_]])) {
+    /** The RDDs [[df]] serves, published once built (read lock-free). */
+    @volatile var rdds: Seq[RDD[_]] = Nil
+    lazy val df: DataFrame = build() match { // lazy val = per-instance (per-key) lock
+      case (d, rs) => rdds = rs; d
+    }
   }
 
   /** Context key: (applicationId, startTime) — unique per SparkContext
@@ -84,9 +74,8 @@ private[graft] object StageMemo {
   private def memoized(spark: SparkSession, dir: String, stage: String,
       build: => DataFrame): DataFrame = {
     val ck = ctxKey(spark)
-    // only ONE SparkContext can be active per JVM: entries from any other
-    // context are dead — evict them so cycled sessions don't pin stopped
-    // contexts' plans/RDDs for process lifetime
+    // one active SparkContext per JVM: evict other contexts' (dead) entries
+    // so cycled sessions don't pin stopped contexts' plans and RDDs
     stageCache.keys.filter(_._1 != ck).foreach(stageCache.remove)
     val q = currentQuery.get()
     if (q != null)
@@ -94,12 +83,9 @@ private[graft] object StageMemo {
         case Some(rs) => Some(rs + q)
         case None     => Some(Set(q))
       }
-    // REBUILD VISIBILITY (ADVICE r15): a build of a stage that was already
-    // released this tracking window means some consumer ran AFTER the
-    // stage's inferred last reader — e.g. two distinct stages aliasing
-    // under normalize(), or warm-SF attribution not transferring — and its
-    // cost lands inside that consumer's timed line. Count it so the bench
-    // artifact can surface the inflation instead of hiding it.
+    // REBUILD VISIBILITY (ADVICE r15): a build of a stage released in this
+    // tracking window bills a consumer that ran after the stage's inferred
+    // last reader; count it so the bench artifact shows the inflation.
     val key = (ck, dir, stage)
     if (!stageCache.contains(key) && releasedStages.contains(normalize(stage))) {
       rebuildCounter.incrementAndGet()
@@ -112,8 +98,24 @@ private[graft] object StageMemo {
     // TrieMap.getOrElseUpdate is atomic per key; the eager checkpoint job
     // runs under the winning Memo's own lazy-val lock, so two stages build
     // concurrently while two callers of the SAME stage still share one build
-    stageCache.getOrElseUpdate(key,
-      new Memo(() => build.localCheckpoint(true))).df
+    stageCache.getOrElseUpdate(key, new Memo(() => materialize(build))).df
+  }
+
+  /** A build that is only materialized checkpoint scans and unions of
+    * them, none held by a resident entry, is kept as it is (a cut would
+    * write its rows again); any other build is cut. Ownership keeps
+    * [[unpersist]] of one entry off the blocks another entry serves. */
+  private def materialize(build: DataFrame): (DataFrame, Seq[RDD[_]]) = {
+    def cutsOf(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case lr: LogicalRDD => lr.rdd }
+    val plan = build.queryExecution.optimizedPlan
+    val cuts = cutsOf(build)
+    val held = stageCache.values.flatMap(_.rdds.map(_.id)).toSet
+    val alreadyCut = cuts.nonEmpty &&
+      !plan.exists { case _: LogicalRDD | _: Union => false; case _ => true } &&
+      cuts.forall(r => r.isCheckpointed && !held(r.id))
+    if (alreadyCut) (build, cuts)
+    else { val cut = truncate(build); (cut, cutsOf(cut)) }
   }
 
   // ------------------------------------------------ plan audits
@@ -134,6 +136,15 @@ private[graft] object StageMemo {
     * lineage inside [[audit]]. */
   def shared(df: DataFrame): DataFrame =
     if (auditing.value) df else df.localCheckpoint(false)
+
+  /** The lineage cut for driver loops and builds: an EAGER local
+    * checkpoint, inside [[audit]] too, because a loop needs the action to
+    * progress (the CC round's `Observation` fires only when its job runs).
+    * A cut, not a cache: under a cache each round's logical plan still
+    * nests the whole lineage, so planning cost grows per round — the
+    * round-13 BPE probe measured exponent 3.6 in the merge count (k = 16)
+    * under cache, 1.0 after the cut. */
+  def truncate(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Resident stage names (spec hook). */
   private[operators] def residentStages: Set[String] = stageCache.keySet.map(_._3).toSet
@@ -223,16 +234,14 @@ private[graft] object StageMemo {
   /** normalized stage → queries whose timed window absorbed a rebuild. */
   def rebuildLog: Map[String, Set[String]] = rebuilds.toMap
 
-  /** Frees a released stage's checkpoint blocks. The checkpointed Dataset's
-    * plan root is the LogicalRDD wrapping the persisted RDD; unpersist on
-    * it is idempotent and safe against the ContextCleaner. Lineage was
-    * truncated at checkpoint time, so the RDD must never be acted on again
-    * — guaranteed here because the memo entry is removed first and every
-    * consumer re-enters through [[apply]]. */
+  /** Frees a released stage's checkpoint blocks: the RDDs [[materialize]]
+    * checked and served (one for a cut build, one per branch for a kept
+    * union of cuts). Unpersist is idempotent and safe against the
+    * ContextCleaner. Lineage was truncated at checkpoint time, so the RDDs
+    * must never be acted on again — guaranteed here because the memo entry
+    * is removed first and every consumer re-enters through [[apply]]. */
   private def unpersist(m: Memo): Unit =
-    try m.df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+    m.rdds.foreach { r =>
+      try r.unpersist(blocking = false) catch { case NonFatal(_) => () }
     }
-    catch { case NonFatal(_) => () }
 }

@@ -191,12 +191,8 @@ object TextAnalysis {
 
   private def bpeTrainRun(spark: SparkSession, dir: String, k: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {
-    // localCheckpoint, NOT cache: a cache materializes the data but each
-    // round's LOGICAL plan still nests the whole lineage, so analyzer/
-    // optimizer cost grows per round and the k axis goes super-linear —
-    // the round-13 bpek probe measured exponent 3.6 at k=16 under cache,
-    // 1.0 after the lineage cut (the PageRank/recursive-reach precedent)
-    var vocab = bpeVocab(spark, dir).localCheckpoint()
+    // a lineage cut per merge round, not a cache (see StageMemo.truncate)
+    var vocab = StageMemo.truncate(bpeVocab(spark, dir))
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     var rank = 1
     while (rank <= k) {
@@ -211,11 +207,9 @@ object TextAnalysis {
         .limit(1).collect()(0)
       val (l, r, c) = (best.getString(0), best.getString(1), best.getLong(2))
       learned += ((rank.toLong, l, r, l + r, c))
-      // eager localCheckpoint materializes AND cuts lineage; the replaced
-      // parent's blocks are dropped once unreferenced (ContextCleaner)
-      vocab = vocab
-        .withColumn("rep", expr(s"replace(rep, '<$l><$r>', '<$l$r>')"))
-        .localCheckpoint()
+      // the replaced parent's blocks are dropped once unreferenced
+      vocab = StageMemo.truncate(vocab
+        .withColumn("rep", expr(s"replace(rep, '<$l><$r>', '<$l$r>')")))
       rank += 1
     }
     (learned.toSeq, vocab)
@@ -2304,7 +2298,7 @@ object TextAnalysis {
     // (doc, word, tf) rollup materialized ONCE: the vocab fit and the
     // scoring join both read it, and without the checkpoint Spark executes
     // the corpus explode twice as separate physical subtrees — the exact
-    // double-scan docTermTf's localCheckpoint exists to avoid (ADVICE r7).
+    // double-scan the nb_docterm stage exists to avoid (ADVICE r7).
     // The rollup (distinct words per doc) is strictly smaller than the raw
     // token stream, so this is also the cheaper artifact to materialize.
     val tf = StageMemo.shared(table(spark, dir, "documents")

@@ -807,8 +807,8 @@ object ProfileQueries {
     * the 10-table profile DAG largely table-by-table (AQE materializes
     * each table's shuffle stages in sequence down the union), so 9 tables
     * idle while lineitem's critical path runs. Submitting each branch's
-    * own (tiny: rows-per-column) localCheckpoint from a bounded pool lets
-    * the next table's scan back-fill the current one's straggler tail —
+    * own (tiny: rows-per-column) cut from a bounded pool lets the next
+    * table's scan back-fill the current one's straggler tail —
     * measured 3.59 → 2.25 s steady on the catalog build (sf0.1, see
     * `OPTIMIZATION_r17.md`). Deterministic: branch order is fixed, every
     * branch materializes exactly the rows its plan defines, and all
@@ -837,7 +837,7 @@ object ProfileQueries {
           if (failed.get) (i, null)
           else {
             sc.addJobTag(tag)
-            try (i, f.localCheckpoint(true)) finally sc.removeJobTag(tag)
+            try (i, graft.operators.StageMemo.truncate(f)) finally sc.removeJobTag(tag)
           }
         }
       }
@@ -1300,8 +1300,8 @@ object ProfileQueries {
     // the bucket-offset branch and the per-row contribution branch both
     // read the grouped frame, and Spark has no cross-branch CSE — without
     // materialization the scan + group-by ran twice (r16; plan: 2 scans
-    // → 1). Value-domain-bounded rows (distinct cents), so the lazy
-    // localCheckpoint is tiny at any corpus size.
+    // → 1). Value-domain-bounded rows (distinct cents), so the shared
+    // frame is tiny at any corpus size.
     val grp = graft.operators.StageMemo.shared(grp0)
     val wLocal = Window.partitionBy("bucket").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, -1)

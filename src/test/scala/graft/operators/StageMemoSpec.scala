@@ -42,6 +42,58 @@ class StageMemoSpec extends AnyFunSuite {
     assert(builds == 2, "a released stage must rebuild for a later consumer")
     assert(r1 == r2)
     StageMemo.releaseAll()
+
+    // a build that already ends in cuts: a union of two truncated frames
+    val sc = spark.sparkContext
+    val rec = graft.QueryRecorder.install(sc)
+    try {
+      def cuts() = StageMemo.truncate(spark.range(0, 500).toDF("id"))
+        .union(StageMemo.truncate(spark.range(500, 1000).toDF("id")))
+      def cutStage() = StageMemo(spark, "/tmp", "memo_spec_cut_union")(cuts())
+      graft.QueryRecorder.time(sc, "memo_spec_cuts")(cuts())
+      val base = persistedRddIds // the probe's cuts stay until a GC frees them
+      val u1 = graft.QueryRecorder.time(sc, "memo_spec_cut_build")(cutStage())
+      assert(u1.error.isEmpty, u1.error)
+      val jobs = rec.drain(sc)
+      assert(jobs("memo_spec_cut_build").jobs == jobs("memo_spec_cuts").jobs,
+        s"the memo wrote a build that already ends in cuts a second time: $jobs")
+      val cutRdds = persistedRddIds -- base
+      assert(cutRdds.size == 2, s"the memo must keep both cuts as they are: $cutRdds")
+      val rows1 = cutStage().collect().map(_.getLong(0)).sorted
+      assert(rows1.toSeq == (0L until 1000L))
+      StageMemo.releaseAll()
+      assert((persistedRddIds -- base).isEmpty,
+        "release must unpersist every cut under a kept union, not only the first")
+      assert(cutStage().collect().map(_.getLong(0)).sorted.toSeq == rows1.toSeq,
+        "a released union of cuts must rebuild the same rows")
+    } finally sc.removeSparkListener(rec)
+    StageMemo.releaseAll()
+  }
+
+  test("a build that returns a resident stage's frame is cut again; releasing it keeps that stage readable") {
+    StageMemo.releaseAll()
+    def owner() = StageMemo(spark, "/tmp", "memo_spec_owner") {
+      spark.range(100).select((col("id") * 3).as("v"))
+    }
+    val rows = owner().collect().map(_.getLong(0)).sorted
+    val ownerRdds = persistedRddIds
+    StageMemo(spark, "/tmp", "memo_spec_alias")(owner()).count()
+    StageMemo.releaseAfter("q_alias", Map("memo_spec_alias" -> "q_alias"))
+    assert(StageMemo.residentStages.contains("memo_spec_owner"))
+    assert(ownerRdds.subsetOf(persistedRddIds),
+      "releasing the alias freed blocks the owner stage still serves")
+    assert(owner().collect().map(_.getLong(0)).sorted.toSeq == rows.toSeq)
+    StageMemo.releaseAll()
+  }
+
+  test("static scan: StageMemo is the only materializer; no Throwable catch, no memoStage") {
+    import graft.GraftSessionSpec.codeMatches
+    val cuts = codeMatches("src/main/scala", "localCheckpoint")
+    assert(cuts == Seq("graft/operators/StageMemo.scala"), s"lineage cuts outside StageMemo: $cuts")
+    val catches = codeMatches("src/main/scala", ":\\s*Throwable\\s*=>")
+    assert(catches.isEmpty, s"Throwable catches (use NonFatal): $catches")
+    val wrappers = codeMatches("src/main/scala", "memoStage")
+    assert(wrappers.isEmpty, s"memo wrappers (call StageMemo directly): $wrappers")
   }
 
   test("reader attribution names each stage's last consumer; releaseAfter frees exactly its stages") {
